@@ -252,6 +252,12 @@ object Bench {
       .mkString("{", ",", "}")
     val mins = results.map { case (k, _, m, _) => "\"" + k + "\":" + f"$m%.3f" }
       .mkString("{", ",", "}")
+    // the totals sum the measured queries only, so a failed query is
+    // reported by name (n_failed / failed on both JSON lines) and fails
+    // the run instead of making the total look faster
+    val failed = results.collect { case (k, med, _, _) if med < 0 => k }
+    val failedJson = s""""n_failed":${failed.size},"failed":""" +
+      failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val byName = results.map(r => r._1 -> r._2).toMap
     val byNameMin = results.map(r => r._1 -> r._3).toMap
@@ -271,7 +277,7 @@ object Bench {
         " — medians are load-contaminated; compare min (core_total_min) instead")
     }
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","core_total":$coreTotal%.3f,"core_total_min":$coreTotalMin%.3f,"contended":$contended,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd"$streamJson$streamSizedJson,"queries":$qs,"mins":$mins,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","core_total":$coreTotal%.3f,"core_total_min":$coreTotalMin%.3f,$failedJson,"contended":$contended,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd"$streamJson$streamSizedJson,"queries":$qs,"mins":$mins,"sf":"$sfDir"}"""
     println(line)
     // all raw runs per query, not just the median — round-over-round
     // drift is unattributable without per-run spread (the r6→r9 core_total
@@ -316,7 +322,7 @@ object Bench {
     // unexpected trailing stdout line must not decapitate the JSON)
     val compactBudget = 1820
     val compactPrefix =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","core_total":$coreTotal%.3f,"core_total_min":$coreTotalMin%.3f,"contended":$contended,"load_hot":$loadHot,"stat":"min","nq":${results.length},"nq_shown":NNN,"queries":{"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","core_total":$coreTotal%.3f,"core_total_min":$coreTotalMin%.3f,$failedJson,"contended":$contended,"load_hot":$loadHot,"stat":"min","nq":${results.length},"nq_shown":NNN,"queries":{"""
     val compactSuffix = s"""},"sf":"$sfDir"}"""
     val compactOrder =
       core.filter(byNameMin.contains) ++
@@ -332,5 +338,6 @@ object Bench {
       entries.mkString(",") + compactSuffix
     println(compactLine)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

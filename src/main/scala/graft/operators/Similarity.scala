@@ -332,6 +332,10 @@ object Similarity {
       val picks = twoLevelNearestLists(
         q.select(col("query_id").as("graft_pid"), col("qv").as("graft_pv")),
         centroids, nprobe, nlist, metaProbes, metaPre)
+      // Both branches assume query_id is unique within `q` (the id
+      // invariant every caller upholds): on duplicate ids this route
+      // keeps one pick set per input row while the re-join below would
+      // multiply the duplicates against each other.
       if (q.columns.toSeq == Seq("query_id", "qv"))
         // the common (query_id, qv) shape: the vector already rode the
         // pick kernel — emit it directly instead of re-joining the query
@@ -446,6 +450,8 @@ object Similarity {
       val picks = twoLevelNearestLists(
         c.select(col("corpus_id").as("graft_pid"), col("cv").as("graft_pv")),
         centroids, n = 1, nlist, metaProbes, metaPre)
+      // as in [[probeLists]], both branches assume corpus_id is unique
+      // within `c`: the re-join below would multiply duplicate ids
       if (carry.toSeq == Seq("cv"))
         // plain (corpus_id, cv) assignment: the vector already rode the
         // pick kernel — no key-partitioned re-join needed (two exchanges
@@ -1093,6 +1099,11 @@ object Similarity {
     // yields bit-identical sums — slots of dropped centroids fill 0 and
     // are never referenced by any code. Persisted-codebook callers keep
     // the derive (-1): the codebook's true ksub is not recorded at rest.
+    // Contract: a hint must be ≥ max(cent_id)+1 — a smaller one would
+    // drop the high-centroid slots of the last subspace and yield wrong
+    // distances, not an error.
+    require(ksubHint == -1 || ksubHint >= 1,
+      s"PQ ksub hint must be -1 (derive) or >= 1, got $ksubHint")
     val ksub = if (ksubHint >= 1) ksubHint else {
       // read the max as nullable and fail typed: an empty codebook frame
       // would otherwise surface as an opaque NPE from getInt on a null row
@@ -1116,6 +1127,10 @@ object Similarity {
       m: Int = 8, dim: Int = 64, rerank: Int = 50,
       ksub: Int = -1): DataFrame = {
     require(rerank >= k, "pqTopK: rerank must be >= k")
+    // ksub: -1 derives it from the codebook; a hint must be ≥
+    // max(cent_id)+1 (see adcLutFlat)
+    require(ksub == -1 || ksub >= 1,
+      s"pqTopK: ksub must be -1 (derive) or >= 1, got $ksub")
     val lut = adcLutFlat(queries, codebook, vecCol, idCol, m, dim, ksub)
     val adc = encoded
       .crossJoin(broadcast(lut))

@@ -245,169 +245,6 @@ object DeltaLog {
       s""""createdTime":${System.currentTimeMillis()}}}"""
   }
 
-  /** The table's stable metaData.id from the newest metaData action —
-    * post-checkpoint commits newest→oldest, checkpoint fallback.
-    */
-  private def tableMetaDataId(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Option[String] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def idOf(json: String): Option[String] = {
-      val node = try mapper.readTree(json) catch { case _: Exception => null }
-      val m = if (node == null) null
-        else if (node.has("metaData")) node.get("metaData") else node
-      if (m == null || !m.isObject) None
-      else Option(m.get("id")).filterNot(_.isNull).map(_.asText)
-    }
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    existingVersions(fs, log).filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator
-          .filter(_.contains("\"metaData\"")).flatMap(idOf).toSeq.lastOption
-      }.nextOption()
-      .orElse(cpFloor.flatMap(v => readCheckpoint(spark, fs, log, v))
-        .flatMap { cp =>
-          if (!cp.columns.contains("metaData")) None
-          else cp.where(col("metaData").isNotNull)
-            .select(org.apache.spark.sql.functions.to_json(col("metaData")))
-            .collect().headOption.flatMap(r => idOf(r.getString(0)))
-        })
-  }
-
-  /** Newest committed SetTransaction version for `appId` — commits
-    * newest-first (driver-side Jackson over the tiny files), falling back
-    * to the checkpoint parquet when older commits were cleaned up.
-    * Returns None when the log doesn't exist or carries no txn for the
-    * app.
-    */
-  private[sources] def latestTxnVersion(spark: SparkSession, fs: FileSystem,
-      log: HPath, appId: String): Option[Long] = {
-    if (!fs.exists(log)) return None
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    val fromCommits = existingVersions(fs, log).reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val t = if (node == null) null else node.get("txn")
-        if (t != null && t.get("appId") != null &&
-            t.get("appId").asText == appId && t.get("version") != null)
-          Some(t.get("version").asLong)
-        else None
-      }
-    }.maxOption
-    fromCommits.orElse(lastCheckpointVersion(fs, log).flatMap { v =>
-      readCheckpoint(spark, fs, log, v).flatMap { df =>
-        if (!df.columns.contains("txn")) None
-        else df.where(col("txn").isNotNull && col("txn.appId") === appId)
-          .agg(org.apache.spark.sql.functions.max(col("txn.version")))
-          .collect().headOption.flatMap(r =>
-            if (r.isNullAt(0)) None else Some(r.getLong(0)))
-      }
-    })
-  }
-
-  /** Partition columns of the latest metaData action in the log (newest
-    * commit wins — merge commits refresh metaData). Driver-side Jackson
-    * parse of the tiny commit files.
-    */
-  private def latestPartitionColumns(fs: FileSystem, log: HPath,
-      asOf: Option[Long] = None): Option[Seq[String]] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    existingVersions(fs, log).filter(v => asOf.forall(v <= _))
-      .reverse.iterator.flatMap { v =>
-      val text = readString(fs, new HPath(log, commitName(v)))
-      text.linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val md = if (node == null) null else node.get("metaData")
-        val pc = if (md == null) null else md.get("partitionColumns")
-        if (pc != null && pc.isArray) {
-          val cols = scala.collection.mutable.ArrayBuffer.empty[String]
-          pc.forEach(c => cols += c.asText)
-          Some(cols.toSeq)
-        } else None
-      }.toSeq.lastOption // last metaData within the newest commit that has one
-    }.nextOption()
-  }
-
-  /** Table partition columns from the newest metaData — commits first,
-    * checkpoint fallback when older commits were cleaned up. `asOf`
-    * bounds the search like [[tableSchemaJson]]: a time-travel read
-    * resolves against the metaData AS OF that version (an overwrite may
-    * re-partition a table; its layout must not leak backwards).
-    */
-  private def tablePartitionColumns(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Option[Seq[String]] = {
-    val cacheKey = (logIdentity(fs, tbl), asOf.getOrElse(-1L))
-    val hit = partColsCache.get(cacheKey)
-    if (hit != null) return hit
-    val result = latestPartitionColumns(fs, logDir(tbl), asOf)
-      .orElse(lastCheckpointVersion(fs, logDir(tbl))
-        .filter(v => asOf.forall(v <= _)).flatMap { v =>
-        readCheckpoint(spark, fs, logDir(tbl), v).flatMap { cp =>
-        if (cp.columns.contains("metaData")) {
-          val rows = cp.where(col("metaData").isNotNull)
-            .select(col("metaData.partitionColumns")).collect()
-          rows.headOption.map(_.getSeq[String](0))
-        } else None
-      }})
-    if (partColsCache.size > 256) partColsCache.clear() // bound, not LRU
-    partColsCache.put(cacheKey, result)
-    result
-  }
-
-  /** Table schema JSON (metaData.schemaString) — newest commit first,
-    * checkpoint fallback. Same visibility rule as partition columns.
-    * `asOf` bounds the search to commits ≤ that version (the schema a
-    * time-travel read must resolve against — metaData time-travels with
-    * the data, so a post-asOf schema evolution must not leak backwards).
-    */
-  private def tableSchemaJson(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Option[String] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val cacheKey = (logIdentity(fs, tbl), asOf.getOrElse(-1L))
-    val hit = schemaCache.get(cacheKey)
-    if (hit != null) return hit
-    val mapper = new ObjectMapper()
-    val log = logDir(tbl)
-    val versions = existingVersions(fs, log)
-      .filter(v => asOf.forall(v <= _))
-    val fromCommits = versions.reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val md = if (node == null) null else node.get("metaData")
-        val ss = if (md == null) null else md.get("schemaString")
-        if (ss != null && ss.isTextual) Some(ss.asText) else None
-      }.toSeq.lastOption
-    }.nextOption()
-    val result = fromCommits.orElse(lastCheckpointVersion(fs, log)
-      .filter(v => asOf.forall(v <= _)).flatMap { v =>
-      readCheckpoint(spark, fs, log, v).flatMap { cp =>
-        if (cp.columns.contains("metaData")) {
-          val rows = cp.where(col("metaData").isNotNull)
-            .select(col("metaData.schemaString")).collect()
-          rows.headOption.map(_.getString(0))
-        } else None
-      }
-    })
-    if (schemaCache.size > 256) schemaCache.clear() // bound, not LRU
-    schemaCache.put(cacheKey, result)
-    result
-  }
-
-  /** [[tableSchemaJson]] parsed to a StructType — None when the log has no
-    * schemaString or it doesn't parse (foreign/v0 writers), which is
-    * exactly when a reader must fall back to file footers.
-    */
-  private def parsedTableSchema(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Option[StructType] =
-    tableSchemaJson(spark, fs, tbl, asOf).flatMap { js =>
-      try Some(org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[StructType])
-      catch { case _: Exception => None }
-    }
-
   /** The protocol's legal LOSSLESS scalar widenings (typeWidening table
     * feature): the integral chain, float→double, integrals→double,
     * date→timestampNtz, and decimal growth whose integer-digit capacity
@@ -582,10 +419,7 @@ object DeltaLog {
   }
 
   private def existingVersions(fs: FileSystem, log: HPath): Seq[Long] =
-    if (!fs.exists(log)) Nil
-    else fs.listStatus(log).toSeq
-      .map(_.getPath.getName).filter(_.matches("\\d{20}\\.json"))
-      .map(_.stripSuffix(".json").toLong).sorted
+    commitVersions(logListing(fs, log))
 
   /** The next free commit version, or None when the directory has no
     * delta log at all. MUST consult the checkpoint as well as the commit
@@ -634,8 +468,8 @@ object DeltaLog {
     // Structured Streaming foreachBatch sink issues after a crash. The
     // txn watermark survives log cleanup because [[writeCheckpoint]]
     // folds the newest txn per appId into the checkpoint.
-    if (txn.exists { case (appId, v) =>
-        latestTxnVersion(spark, fs, logDir(tbl), appId).exists(_ >= v) })
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    if (txn.exists { case (appId, v) => snap.txns.get(appId).exists(_ >= v) })
       return
     // "fresh" = this commit starts a new log (version 0): any mode when
     // the log doesn't exist yet. An append/merge bootstrap ADOPTS any
@@ -647,11 +481,11 @@ object DeltaLog {
     // history all survive, so time travel to pre-overwrite versions and
     // CDF across the boundary keep working (old files stay on disk until
     // vacuum's retention expires them).
-    val hasLog = nextVersion(fs, logDir(tbl)).isDefined
+    val hasLog = snap.version >= 0
     // delta.appendOnly forbids OVERWRITE too (delta-spark's
     // assertRemovable): it removes every live row
     if (m == "overwrite" && hasLog)
-      requireNotAppendOnly(spark, fs, tbl, "write_delta")
+      requireNotAppendOnly(snap, "write_delta")
     // writer-protocol fidelity: refuse to mutate a table whose declared
     // writer features we would silently break (CDF deletes without cdc
     // actions, row tracking, generated/identity columns, unknown v7
@@ -660,7 +494,7 @@ object DeltaLog {
     // and adds pure new data, which CDF readers serve exactly from the
     // add/remove actions (delta-spark's overwrite emits no cdc either).
     if (hasLog)
-      requireWriterCapability(spark, fs, tbl, "write_delta",
+      requireWriterCapability(snap, "write_delta",
         adds = true, removes = m == "overwrite", rewrites = m == "overwrite",
         removesWholeFiles = m == "overwrite",
         // append/merge/overwrite all mint fresh base row ids stepping
@@ -702,7 +536,7 @@ object DeltaLog {
           s"unknown columnMapping '$cm' — use none, name or id")
       if (m != "overwrite") {
         if (hasLog) {
-          val tableMode = columnMappingMode(spark, fs, tbl)
+          val tableMode = snap.mappingMode
           if (cm != tableMode)
             throw graft.GraftError.InvalidOperation("write_delta",
               s"$m declares columnMapping=$cm but $tbl uses mode " +
@@ -714,7 +548,7 @@ object DeltaLog {
       }
     }
     val priorConf: Map[String, String] =
-      if (hasLog) tableConfiguration(spark, fs, tbl) else Map.empty
+      if (hasLog) snap.configuration else Map.empty
     val freshMappedMode: String =
       if (m != "overwrite") "none"
       else columnMapping.getOrElse(
@@ -737,12 +571,12 @@ object DeltaLog {
       } else None
     val mappedInfo: Option[(String, StructType)] =
       if (hasLog && m != "overwrite") {
-        val mode = columnMappingMode(spark, fs, tbl)
+        val mode = snap.mappingMode
         if (mode != "none" && mode != "name" && mode != "id")
           throw graft.GraftError.InvalidOperation("write_delta",
             s"$tbl uses unknown column mapping mode '$mode'; only " +
               "name- and id-mode tables can be appended to")
-        val mapped = logicalSchemaIfMapped(spark, fs, tbl)
+        val mapped = snap.logicalIfMapped
         mapped.foreach { case (mo, logical) =>
           // merge IS supported on mapped tables when schema-stable: the
           // column checks below (no missing, no extra vs the logical
@@ -773,8 +607,7 @@ object DeltaLog {
       // appends must match the table's declared partitioning — silently
       // mixing layouts would corrupt partition inference on read. Falls
       // back to the checkpoint's metaData when older commits were cleaned.
-      val tableCols = tablePartitionColumns(spark, fs, tbl)
-      tableCols.foreach { cols =>
+      snap.partitionColumns.foreach { cols =>
         // mapped tables: metaData.partitionColumns may be spelled
         // logically (delta-spark) or physically (other writers) — the
         // caller always speaks logical, so accept either image
@@ -836,7 +669,7 @@ object DeltaLog {
           "delta log over pre-existing parquet — the adopted files' rows " +
           "were never validated; load and overwrite instead")
     val enforceSchema: Option[StructType] =
-      if (hasLog && m != "overwrite") parsedTableSchema(spark, fs, tbl)
+      if (hasLog && m != "overwrite") snap.schema
       else None
     // generated columns: absent ones are COMPUTED from their expressions
     // (dfIn carries them into staging), caller-supplied ones validate
@@ -929,7 +762,7 @@ object DeltaLog {
       val extra = df.columns.filterNot(logical.fieldNames.contains)
       if (extra.isEmpty) None
       else {
-        val confMax = tableConfiguration(spark, fs, tbl)
+        val confMax = snap.configuration
           .get("delta.columnMapping.maxColumnId")
           .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(0L)
         // nested annotations count too (a foreign writer may annotate
@@ -1029,10 +862,13 @@ object DeltaLog {
     var overwriteRemoves: Seq[(String, Long, Option[String])] = Nil
     def captureOverwriteRemoves(): Unit =
       if (m == "overwrite" && hasLog) {
-        val (base, pairs) =
-          overwriteRemoveSet(spark, path, snapshotDriverMaxBytes)
-        overwriteRemoveBase = base
-        overwriteRemoves = pairs
+        val cur = snap.forCommit(nextVersion(fs, logDir(tbl)).getOrElse(0L))
+        overwriteRemoveBase = cur.version + 1
+        // path-level entries: on a large log the driver holds the same
+        // O(paths) floor as the remove actions this commit spells out
+        // anyway, never the full stats/partitionValues metadata
+        overwriteRemoves = cur.addsWhere(lean = true)
+          .map(a => (a.rel, a.size, a.dv.map(dvDescriptorJson)))
       }
     captureOverwriteRemoves()
     // overwrite of a NON-delta directory wipes it only now, with the
@@ -1075,11 +911,10 @@ object DeltaLog {
     // files written before the widening keep their narrow physical type
     // and upcast at scan (the reader side this engine already carries)
     val typeWidenEnabled = !fresh &&
-      confEnabled(tableConfiguration(spark, fs, tbl),
-        "delta.enableTypeWidening")
+      confEnabled(snap.configuration, "delta.enableTypeWidening")
     val evolvedAppendSchema: Option[StructType] =
       if (fresh || m != "append" || mappedSchema.nonEmpty) None
-      else parsedTableSchema(spark, fs, tbl).flatMap { t =>
+      else snap.schema.flatMap { t =>
         // case-INSENSITIVE like Spark resolution: a frame spelling a
         // declared column differently is the SAME column (reads resolve
         // it against the declared name), not a schema evolution — the
@@ -1098,13 +933,14 @@ object DeltaLog {
     // would break every later declared-schema read — refuse typed
     if (m == "append" && !fresh && mappedSchema.isEmpty &&
         evolvedAppendSchema.isEmpty)
-      parsedTableSchema(spark, fs, tbl).foreach { t =>
+      snap.schema.foreach { t =>
         val conflicts = appendTypeConflicts(t, df.schema, typeWidenEnabled)
         if (conflicts.nonEmpty)
           throw graft.GraftError.InvalidOperation("write_delta",
             s"append into $path: ${conflicts.mkString("; ")}")
       }
     def actionsFor(version: Long): String = {
+      val cur = snap.forCommit(version)
       val actions = ListBuffer.empty[String]
       // in-commit timestamp: evaluated per slot attempt (a rebase retry
       // follows a winner whose ICT this commit must exceed); the value
@@ -1141,8 +977,7 @@ object DeltaLog {
         // version-preserving overwrite: the existing protocol stays
         // unless the new content NEEDS more (preserved configuration
         // means features never shrink, so only upgrades ever emit)
-        protocolUpgradeFor(tableFullProtocol(spark, fs, tbl),
-          requiredProtocol).foreach(actions += _)
+        protocolUpgradeFor(cur.protocol, requiredProtocol).foreach(actions += _)
       // merge commits refresh metaData with the post-write merged schema —
       // EXCEPT on a mapped table, where the gate above already proved the
       // merge schema-stable and the existing metaData (the mapping
@@ -1176,7 +1011,7 @@ object DeltaLog {
             // 100 TB) and tripped over non-parquet DV bin files. A log
             // with no parseable schemaString (foreign writers) falls back
             // to the footer read.
-            parsedTableSchema(spark, fs, tbl)
+            cur.schema
               .map(t => mergeSchemas(t, df.schema, path,
                 widen = typeWidenEnabled)).getOrElse(
               spark.read.option("mergeSchema", "true").parquet(path).schema)
@@ -1199,7 +1034,7 @@ object DeltaLog {
           // (an overwrite may de-partition a table — the new layout
           // replaces the old, exactly like the schema does)
           if (version > 0L && partitionBy.isEmpty && m != "overwrite")
-            tablePartitionColumns(spark, fs, tbl).getOrElse(partitionBy)
+            cur.partitionColumns.getOrElse(partitionBy)
           else partitionBy
         val metaConf =
           if (version == 0L || m == "overwrite") {
@@ -1243,7 +1078,7 @@ object DeltaLog {
             else base
           }
           else {
-            val base = tableConfiguration(spark, fs, tbl)
+            val base = cur.configuration
             mappedEvolved match {
               case Some(ev) =>
                 // nested mints allocate ids below the top level too —
@@ -1255,7 +1090,7 @@ object DeltaLog {
           }
         actions += metaDataAction(schema.json, metaParts, metaConf,
           tableId = if (version == 0L) None
-            else tableMetaDataId(spark, fs, tbl))
+            else cur.tableId)
       }
       // version-preserving overwrite: remove every file of the
       // pre-commit active set (dataChange=true — rows disappear), the
@@ -1276,7 +1111,7 @@ object DeltaLog {
         if (!rowTrackingEnabled(enforceConf)) Map.empty
         else {
           val hwm = if (version == 0L) -1L
-            else rowIdHighWaterMark(spark, fs, tbl)
+            else cur.rowIdHighWaterMark
           val (byRel, newHwm) = assignBaseRowIds(fs, tbl,
             newFiles.map(_._1), statsByRel, hwm)
           actions += domainMetadataAction(newHwm)
@@ -1326,7 +1161,8 @@ object DeltaLog {
         // stop rather than double-commit; the just-moved files stay
         // unreferenced orphans for vacuum
         if (txn.exists { case (appId, v) =>
-            latestTxnVersion(spark, fs, logDir(tbl), appId).exists(_ >= v) })
+            Snapshot(spark, path, None, snapshotDriverMaxBytes).txns.get(appId)
+              .exists(_ >= v) })
           committed = true
         else {
           // identity appends assigned their sequence values from the
@@ -1584,38 +1420,38 @@ object DeltaLog {
     val spark = updates.sparkSession
     val tbl = new HPath(path)
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCollatedColumns(spark, fs, tbl, "upsert_delta",
-      keys.mkString(","))
-    if (!fs.exists(logDir(tbl))) {
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    refuseOnCollatedColumns(snap, "upsert_delta", keys.mkString(","))
+    if (!snap.logExists) {
       // not a delta table: keep the legacy discovery so commitRewrite
       // raises its typed "not a delta table" failure unchanged
       val base = fs.makeQualified(tbl).toUri.getPath.stripSuffix("/")
-      val snap = read(spark, path).withColumn("graft_file", input_file_name())
+      val rows = read(spark, path).withColumn("graft_file", input_file_name())
       val updKeys = updates.select(keys.map(col): _*).distinct()
-      val touchedUris = snap.join(updKeys, keys, "left_semi")
+      val touchedUris = rows.join(updKeys, keys, "left_semi")
         .select("graft_file").distinct().collect().map(_.getString(0)).toSeq
-      val survivors = snap
+      val survivors = rows
         .where(col("graft_file").isInCollection(touchedUris))
         .join(updKeys, keys, "left_anti")
         .drop("graft_file")
-      commitRewrite(spark, path, "UPSERT",
+      commitRewrite(snap, "UPSERT",
         touchedUris.map(uriToRel(base, _)).sorted,
         survivors.unionByName(updates.select(survivors.columns.map(col): _*)))
       return
     }
-    requireNotAppendOnly(spark, fs, tbl, "upsert_delta")
+    requireNotAppendOnly(snap, "upsert_delta")
     // change-data-feed tables get exact MERGE change rows
     // (update_preimage / update_postimage / insert) as _change_data +
     // cdc actions; on MAPPED tables commitRewrite stages the cdc files
     // under physical column names like data files
-    val rtConf = tableConfiguration(spark, fs, tbl)
+    val rtConf = snap.configuration
     val cdfEmit = confEnabled(rtConf, "delta.enableChangeDataFeed")
     // row tracking: survivors keep their ids (materialized through the
     // hidden columns), updated rows inherit the matched row's id, and
     // inserts take the new file's fresh positional defaults
     val (rowTrack, matCols, rtExtraCols) =
-      rowTrackingRewriteInfo(spark, fs, tbl, "upsert_delta")
-    requireWriterCapability(spark, fs, tbl, "upsert_delta",
+      rowTrackingRewriteInfo(snap, "upsert_delta")
+    requireWriterCapability(snap, "upsert_delta",
       adds = true, removes = true, rewrites = true, emitsCdc = cdfEmit,
       rowIdsHandled = rowTrack)
     // generated columns: compute the ones absent from the changeset,
@@ -1623,7 +1459,7 @@ object DeltaLog {
     // gate the CHANGESET (survivors were already live rows) in one
     // aggregate pass over `updates`, bounded by the changeset size,
     // never the table
-    val declared = parsedTableSchema(spark, fs, tbl)
+    val declared = snap.schema
     val genCols = generatedColumns(declared)
     val upd = materializeGenerated(updates, genCols, declared)
     // identity columns resolve AFTER touched-file discovery (matched
@@ -1645,8 +1481,7 @@ object DeltaLog {
     // entries (the whole snapshot only when the keys admit no bounds
     // predicate, i.e. when discovery must scan every file anyway)
     val keyBounds = keyBoundsPredicate(upd, keys)
-    val kept = activeAddsWhere(spark, path, keyBounds,
-      snapshotDriverMaxBytes = snapshotDriverMaxBytes)
+    val kept = snap.addsWhere(keyBounds)
     // key depth over the candidates: discovery scans only kept files,
     // so touched keys both originate from and resolve within them
     val keyDepth = if (kept.isEmpty) 1 else dvKeyDepth(path, kept.map(_.rel))
@@ -1654,7 +1489,7 @@ object DeltaLog {
       if (kept.isEmpty) Nil
       else {
         val discovery = applyDeletionVectors(spark, path, kept,
-          readDataFiles(spark, path,
+          readDataFiles(snap,
             kept.map(a => new HPath(tbl, a.rel).toString),
             withRowMeta = true, keyDepth = keyDepth),
           keepMeta = true, keyDepth = keyDepth)
@@ -1674,7 +1509,7 @@ object DeltaLog {
       if (touched.isEmpty) None
       else {
         val base = applyDeletionVectors(spark, path, touched,
-          readDataFiles(spark, path,
+          readDataFiles(snap,
             touched.map(a => new HPath(tbl, a.rel).toString),
             withRowMeta = true, keyDepth = keyDepth,
             extraCols = rtExtraCols),
@@ -1690,7 +1525,7 @@ object DeltaLog {
         // pure insert: an empty frame with the table's logical columns —
         // built from the log's schema so no data file is even PLANNED
         // (the full-snapshot scan would open every file's path)
-        val base = parsedTableSchema(spark, fs, tbl) match {
+        val base = declared match {
           case Some(s) => spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](),
             stripMeta(s).asInstanceOf[StructType])
@@ -1771,7 +1606,7 @@ object DeltaLog {
         if (touched.isEmpty) Some(ct(updFinal, "insert"))
         else {
           val touchedLive = applyDeletionVectors(spark, path, touched,
-            readDataFiles(spark, path,
+            readDataFiles(snap,
               touched.map(a => new HPath(tbl, a.rel).toString),
               withRowMeta = true, keyDepth = keyDepth),
             keepMeta = true, keyDepth = keyDepth)
@@ -1812,16 +1647,15 @@ object DeltaLog {
           .drop("graft_prev_rid")
       case None => updFinal
     }
-    commitRewrite(spark, path, "UPSERT", touched.map(_.rel).sorted,
+    commitRewrite(snap, "UPSERT", touched.map(_.rel).sorted,
       survivors.unionByName(updFrame.select(survivors.columns.map(col): _*)),
       removeDvJson = touched.flatMap(a =>
         a.dv.map(d => a.rel -> dvDescriptorJson(d))).toMap,
       removeSize = touched.map(a => a.rel -> a.size).toMap,
       cdcDf = cdcDf,
       extraMetaData = identityMetaSchema.map(s =>
-        metaDataAction(s.json,
-          tablePartitionColumns(spark, fs, tbl).getOrElse(Nil), rtConf,
-          tableId = tableMetaDataId(spark, fs, tbl))),
+        metaDataAction(s.json, snap.partitionColumns.getOrElse(Nil), rtConf,
+          tableId = snap.tableId)),
       // a lost slot rebases when the winners are key-disjoint (the
       // bounds predicate mirrors the discovery scan's read set);
       // non-integral keys admit no bounds ⇒ any winner add conflicts
@@ -1842,49 +1676,48 @@ object DeltaLog {
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Int = {
     val tbl = new HPath(path)
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCollatedColumns(spark, fs, tbl, "delete_delta", predicate)
-    if (!fs.exists(logDir(tbl))) {
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    refuseOnCollatedColumns(snap, "delete_delta", predicate)
+    if (!snap.logExists) {
       // not a delta table: legacy shape (commitRewrite raises typed)
       val base = fs.makeQualified(tbl).toUri.getPath.stripSuffix("/")
-      val snap = read(spark, path).withColumn("graft_file", input_file_name())
-      val touchedUris = snap.where(expr(predicate))
+      val rows = read(spark, path).withColumn("graft_file", input_file_name())
+      val touchedUris = rows.where(expr(predicate))
         .select("graft_file").distinct().collect().map(_.getString(0)).toSeq
       if (touchedUris.isEmpty) return 0
-      val survivors = snap
+      val survivors = rows
         .where(col("graft_file").isInCollection(touchedUris))
         // DELETE removes only rows where the predicate is TRUE; a row
         // where it evaluates NULL (nullable columns) must SURVIVE — a
         // bare !expr would filter NULL rows out, silently deleting them
         .where(!coalesce(expr(predicate), lit(false)))
         .drop("graft_file")
-      commitRewrite(spark, path, "DELETE",
+      commitRewrite(snap, "DELETE",
         touchedUris.map(uriToRel(base, _)).sorted, survivors)
       return touchedUris.length
     }
-    requireNotAppendOnly(spark, fs, tbl, "delete_delta")
+    requireNotAppendOnly(snap, "delete_delta")
     // change-data-feed tables get their deleted rows as _change_data +
     // cdc actions in the same commit (exact row-level feed); on MAPPED
     // tables commitRewrite stages the cdc files under physical column
     // names like data files
-    val rtConf = tableConfiguration(spark, fs, tbl)
-    val cdfEmit = confEnabled(rtConf, "delta.enableChangeDataFeed")
+    val cdfEmit = confEnabled(snap.configuration, "delta.enableChangeDataFeed")
     // row tracking: surviving rows keep their ids via the materialized
     // columns (same mechanism as upsert)
     val (rowTrack, matCols, rtExtraCols) =
-      rowTrackingRewriteInfo(spark, fs, tbl, "delete_delta")
-    requireWriterCapability(spark, fs, tbl, "delete_delta",
+      rowTrackingRewriteInfo(snap, "delete_delta")
+    requireWriterCapability(snap, "delete_delta",
       adds = false, removes = true, rewrites = true, emitsCdc = cdfEmit,
       rowIdsHandled = rowTrack)
     // snapshot fold + stats pruning run distributedly above the log-size
     // threshold — the driver materializes only the CANDIDATE entries
-    val kept = activeAddsWhere(spark, path, Some(predicate),
-      snapshotDriverMaxBytes = snapshotDriverMaxBytes)
+    val kept = snap.addsWhere(Some(predicate))
     if (kept.isEmpty) return 0
     // key depth over the candidates: the discovery scan reads only kept
     // files, so touched keys both originate from and resolve within them
     val keyDepth = dvKeyDepth(path, kept.map(_.rel))
     val discovery = applyDeletionVectors(spark, path, kept,
-      readDataFiles(spark, path,
+      readDataFiles(snap,
         kept.map(a => new HPath(tbl, a.rel).toString),
         withRowMeta = true, keyDepth = keyDepth),
       keepMeta = true, keyDepth = keyDepth)
@@ -1893,7 +1726,7 @@ object DeltaLog {
     if (touchedNames.isEmpty) return 0
     val touched = kept.filter(a => touchedNames(relKey(path, a.rel, keyDepth)))
     val survivorScan = applyDeletionVectors(spark, path, touched,
-      readDataFiles(spark, path,
+      readDataFiles(snap,
         touched.map(a => new HPath(tbl, a.rel).toString),
         withRowMeta = true, keyDepth = keyDepth,
         extraCols = rtExtraCols),
@@ -1909,14 +1742,14 @@ object DeltaLog {
     // files' live rows) — one extra scan bounded by the touched set
     val cdcDf = if (!cdfEmit) None else Some(
       applyDeletionVectors(spark, path, touched,
-        readDataFiles(spark, path,
+        readDataFiles(snap,
           touched.map(a => new HPath(tbl, a.rel).toString),
           withRowMeta = true, keyDepth = keyDepth),
         keepMeta = true, keyDepth = keyDepth)
         .where(coalesce(expr(predicate), lit(false)))
         .drop(DvFileCol, DvRowCol)
         .withColumn("_change_type", lit("delete")))
-    commitRewrite(spark, path, "DELETE", touched.map(_.rel).sorted,
+    commitRewrite(snap, "DELETE", touched.map(_.rel).sorted,
       survivors, removeDvJson = touched.flatMap(a =>
         a.dv.map(d => a.rel -> dvDescriptorJson(d))).toMap,
       removeSize = touched.map(a => a.rel -> a.size).toMap,
@@ -1941,68 +1774,12 @@ object DeltaLog {
   private def confEnabled(conf: Map[String, String], key: String): Boolean =
     conf.get(key).exists(v => v != null && v.trim.equalsIgnoreCase("true"))
 
-  private def requireNotAppendOnly(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, op: String): Unit =
-    if (confEnabled(tableConfiguration(spark, fs, tbl), "delta.appendOnly"))
+  private def requireNotAppendOnly(snap: Snapshot, op: String): Unit =
+    if (confEnabled(snap.configuration, "delta.appendOnly"))
       throw graft.GraftError.InvalidOperation(op,
-        s"$tbl declares delta.appendOnly=true — row-removing mutations " +
+        s"${snap.tbl} declares delta.appendOnly=true — row-removing mutations " +
           "are forbidden on append-only tables (append, merge and " +
           "optimize remain available)")
-
-  /** Memo for [[tableWriterProtocol]] keyed by [[logIdentity]] — the
-    * protocol action usually lives only in the version-0 commit, so an
-    * uncached lookup walks the log newest→oldest on every mutation.
-    */
-  private val writerProtoCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long, Long), (Int, Seq[String])]()
-
-  /** Newest protocol action's writer half: (minWriterVersion,
-    * writerFeatures). Only POST-CHECKPOINT commits are walked (newest →
-    * oldest) — the checkpoint fold already carries the newest protocol
-    * from everything at-or-below it, so the walk is bounded by the
-    * checkpoint interval, never O(history) per mutation on a
-    * long-lived log. A log with no protocol action anywhere (not a
-    * delta table / legacy) reports the floor (1, Nil).
-    */
-  private def tableWriterProtocol(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): (Int, Seq[String]) = {
-    val cacheKey = logIdentity(fs, tbl)
-    val hit = writerProtoCache.get(cacheKey)
-    if (hit != null) return hit
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def parse(p: com.fasterxml.jackson.databind.JsonNode): (Int, Seq[String]) = {
-      val v = Option(p.get("minWriterVersion")).map(_.asInt(1)).getOrElse(1)
-      val feats = scala.collection.mutable.ArrayBuffer.empty[String]
-      Option(p.get("writerFeatures")).filter(_.isArray)
-        .foreach(_.forEach(f => feats += f.asText))
-      (v, feats.toSeq)
-    }
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val p = if (node == null) null else node.get("protocol")
-        if (p != null && p.isObject) Some(parse(p)) else None
-      }.toSeq.lastOption
-    }.nextOption()
-    val result = fromCommits.orElse(lastCheckpointVersion(fs, log)
-        .flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-      if (!cp.columns.contains("protocol")) None
-      else cp.where(col("protocol").isNotNull)
-        .select(org.apache.spark.sql.functions.to_json(col("protocol")))
-        .collect().headOption.flatMap { r =>
-          val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-          if (node != null && node.isObject) Some(parse(node)) else None
-        }
-    }).getOrElse((1, Nil))
-    if (writerProtoCache.size > 256) writerProtoCache.clear() // bound, not LRU
-    writerProtoCache.put(cacheKey, result)
-    result
-  }
 
   // ─────────────── protocol cover/union (overwrite upgrades) ───────────────
 
@@ -2010,15 +1787,7 @@ object DeltaLog {
     * `{"protocol":{...}}` action line. */
   private def parseProtocolJson(json: String): (Int, Int, Seq[String], Seq[String]) = {
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val p = if (node.has("protocol")) node.get("protocol") else node
-    def feats(k: String): Seq[String] = {
-      val b = scala.collection.mutable.ArrayBuffer.empty[String]
-      Option(p.get(k)).filter(_.isArray).foreach(_.forEach(f => b += f.asText))
-      b.toSeq
-    }
-    (Option(p.get("minReaderVersion")).map(_.asInt(1)).getOrElse(1),
-      Option(p.get("minWriterVersion")).map(_.asInt(1)).getOrElse(1),
-      feats("readerFeatures"), feats("writerFeatures"))
+    protocolOf(if (node.has("protocol")) node.get("protocol") else node)
   }
 
   /** Writer features a LEGACY minWriterVersion implies (PROTOCOL.md's
@@ -2073,34 +1842,6 @@ object DeltaLog {
     Some(s"""{"protocol":{${fields.mkString(",")}}}""")
   }
 
-  /** Full newest protocol of an existing table — reader AND writer
-    * halves, same post-checkpoint walk as [[tableWriterProtocol]].
-    * Floor (1, 1, Nil, Nil) when no protocol action exists.
-    */
-  private def tableFullProtocol(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): (Int, Int, Seq[String], Seq[String]) = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-          val node = try mapper.readTree(line) catch { case _: Exception => null }
-          if (node != null && node.has("protocol"))
-            Some(parseProtocolJson(line)) else None
-        }.toSeq.lastOption
-      }.nextOption()
-    fromCommits.orElse(cpFloor
-        .flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-      if (!cp.columns.contains("protocol")) None
-      else cp.where(col("protocol").isNotNull)
-        .select(org.apache.spark.sql.functions.to_json(col("protocol")))
-        .collect().headOption.map(r => parseProtocolJson(r.getString(0)))
-    }).getOrElse((1, 1, Nil, Nil))
-  }
-
   // ───────────────────────── row tracking ─────────────────────────
   //
   // Delta's rowTracking writer feature (PROTOCOL.md "Row Tracking"):
@@ -2122,48 +1863,6 @@ object DeltaLog {
   private def rowTrackingEnabled(conf: Map[String, String]): Boolean =
     confEnabled(conf, "delta.enableRowTracking")
 
-  /** Newest `rowIdHighWaterMark` from the delta.rowTracking
-    * domainMetadata — post-checkpoint commits newest→oldest, checkpoint
-    * fallback (the fold carries domainMetadata rows); -1 when the table
-    * has never assigned a row id.
-    */
-  private def rowIdHighWaterMark(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Long = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def hwmOf(json: String): Option[Long] = {
-      val node = try mapper.readTree(json) catch { case _: Exception => null }
-      if (node == null) return None
-      val dm = if (node.has("domainMetadata")) node.get("domainMetadata")
-        else node
-      if (dm == null || dm.get("domain") == null ||
-          dm.get("domain").asText != RowTrackingDomain ||
-          (dm.get("removed") != null && dm.get("removed").asBoolean(false)))
-        None
-      else Option(dm.get("configuration")).map(_.asText).flatMap { cs =>
-        val cn = try mapper.readTree(cs) catch { case _: Exception => null }
-        Option(cn).flatMap(c =>
-          Option(c.get("rowIdHighWaterMark")).map(_.asLong))
-      }
-    }
-    val log = logDir(tbl)
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator
-          .filter(_.contains("\"domainMetadata\""))
-          .flatMap(hwmOf).toSeq.lastOption
-      }.nextOption()
-    fromCommits.orElse(
-      cpFloor.flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-        if (!cp.columns.contains("domainMetadata")) None
-        else cp.where(col("domainMetadata").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("domainMetadata")))
-          .collect().toSeq.flatMap(r => hwmOf(r.getString(0))).maxOption
-      }).getOrElse(-1L)
-  }
-
   private def domainMetadataAction(hwm: Long): String =
     s"""{"domainMetadata":{"domain":"$RowTrackingDomain",""" +
       s""""configuration":"{\\"rowIdHighWaterMark\\":$hwm}",""" +
@@ -2177,65 +1876,18 @@ object DeltaLog {
     * kernel takes top-level columns), or a name doesn't resolve —
     * clustering is best-effort, so Nil just means "plain bin-packing".
     */
-  private def clusteringColumns(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Seq[String] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def colsOf(json: String): Option[Seq[Seq[String]]] = {
-      val node = try mapper.readTree(json) catch { case _: Exception => null }
-      if (node == null) return None
-      val dm = if (node.has("domainMetadata")) node.get("domainMetadata")
-        else node
-      if (dm == null || dm.get("domain") == null ||
-          dm.get("domain").asText != "delta.clustering")
-        None
-      else if (dm.get("removed") != null && dm.get("removed").asBoolean(false))
-        Some(Nil) // removed domain: clustering explicitly dropped
-      else Option(dm.get("configuration")).map(_.asText).flatMap { cs =>
-        val cn = try mapper.readTree(cs) catch { case _: Exception => null }
-        Option(cn).flatMap(c => Option(c.get("clusteringColumns")))
-          .filter(_.isArray).map { arr =>
-            val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-            arr.forEach { pathNode =>
-              val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-              if (pathNode.isArray) pathNode.forEach(p => parts += p.asText)
-              else parts += pathNode.asText
-              out += parts.toSeq
-            }
-            out.toSeq
-          }
-      }
-    }
-    val log = logDir(tbl)
-    if (!fs.exists(log)) return Nil
-    val cpFloor = lastCheckpointVersion(fs, log)
-    val newest: Option[Seq[Seq[String]]] = existingVersions(fs, log)
-      .filter(v => cpFloor.forall(v > _))
-      .reverse.iterator.flatMap { v =>
-        readString(fs, new HPath(log, commitName(v))).linesIterator
-          .filter(_.contains("\"domainMetadata\""))
-          .flatMap(colsOf).toSeq.lastOption
-      }.nextOption()
-      .orElse(cpFloor.flatMap(v => readCheckpoint(spark, fs, log, v))
-        .flatMap { cp =>
-          if (!cp.columns.contains("domainMetadata")) None
-          else cp.where(col("domainMetadata").isNotNull)
-            .select(org.apache.spark.sql.functions.to_json(
-              col("domainMetadata")))
-            .collect().toSeq.flatMap(r => colsOf(r.getString(0))).headOption
-        })
-    val paths = newest.getOrElse(Nil)
+  private def clusteringColumns(snap: Snapshot): Seq[String] = {
+    val paths = snap.clusteringPaths
     if (paths.isEmpty || paths.exists(_.length != 1)) return Nil
     val names = paths.map(_.head)
-    logicalSchemaIfMapped(spark, fs, tbl) match {
+    snap.logicalIfMapped match {
       case Some((_, logical)) =>
         val m = physToLogMap(logical)
         val mapped = names.map(n => m.getOrElse(n,
           if (logical.fieldNames.contains(n)) n else null))
         if (mapped.contains(null)) Nil else mapped
       case None =>
-        val declared = parsedTableSchema(spark, fs, tbl)
-        if (declared.exists(s => names.forall(s.fieldNames.contains)))
+        if (snap.schema.exists(s => names.forall(s.fieldNames.contains)))
           names
         else Nil
     }
@@ -2296,12 +1948,11 @@ object DeltaLog {
     * verbatim, orthogonal to the logical↔physical rename. Missing
     * materialized names refuse typed inside [[matColNames]].
     */
-  private def rowTrackingRewriteInfo(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, op: String)
+  private def rowTrackingRewriteInfo(snap: Snapshot, op: String)
       : (Boolean, Option[(String, String)], Seq[StructField]) = {
-    val conf = tableConfiguration(spark, fs, tbl)
+    val conf = snap.configuration
     val rt = rowTrackingEnabled(conf)
-    val mc = if (rt) Some(matColNames(conf, tbl, op)) else None
+    val mc = if (rt) Some(matColNames(conf, snap.tbl, op)) else None
     (rt, mc, mc.toSeq.flatMap { case (i, v) => Seq(
       StructField(i, org.apache.spark.sql.types.LongType),
       StructField(v, org.apache.spark.sql.types.LongType)) })
@@ -2316,25 +1967,13 @@ object DeltaLog {
     */
   private def withMaterializedRowIds(spark: SparkSession, path: String,
       adds: Seq[DeltaStats.AddEntry], df: DataFrame,
-      matId: String, matVer: String, keyDepth: Int): DataFrame =
-    withMaterializedRowIdTriples(spark,
-      adds.map(a => (relKey(path, a.rel, keyDepth),
-        a.baseRowId.getOrElse(-1L),
-        a.defaultRowCommitVersion.getOrElse(-1L))),
-      df, matId, matVer)
-
-  /** Same row-id attach from bare (fileKey, baseRowId, defaultVer)
-    * triples — what the large-log read collects from the distributed
-    * fold (3 small fields per file, the same O(paths) floor as the
-    * scan's file list) instead of full AddEntries.
-    */
-  private def withMaterializedRowIdTriples(spark: SparkSession,
-      triples: Seq[(String, Long, Long)], df: DataFrame,
-      matId: String, matVer: String): DataFrame = {
+      matId: String, matVer: String, keyDepth: Int): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, when}
     val sess = spark
     import sess.implicits._
-    val baseMap = triples.toDF(DvFileCol, "graft_base_rid", "graft_def_ver")
+    val baseMap = adds.map(a => (relKey(path, a.rel, keyDepth),
+        a.baseRowId.getOrElse(-1L), a.defaultRowCommitVersion.getOrElse(-1L)))
+      .toDF(DvFileCol, "graft_base_rid", "graft_def_ver")
     df.join(broadcast(baseMap), Seq(DvFileCol), "left")
       .withColumn(matId, coalesce(col(s"`$matId`"),
         when(col("graft_base_rid") >= 0,
@@ -2350,7 +1989,7 @@ object DeltaLog {
     * row-tracking table without preserving materialized row ids, or
     * removing rows on a change-data-feed table without emitting cdc
     * actions — so mutations refuse typed, exactly like the read path's
-    * reader-capability guard ([[activeAddsAsOf]]).
+    * reader-capability guard ([[LogReplay]]).
     */
   private val SupportedWriterFeatures = Set(
     "appendOnly", "invariants", "checkConstraints", "columnMapping",
@@ -2473,17 +2112,17 @@ object DeltaLog {
     * expressions and VALIDATE caller-supplied values against them
     * (delta-spark's write contract) — see [[generatedColumns]].
     */
-  private def requireWriterCapability(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, op: String, adds: Boolean, removes: Boolean,
+  private def requireWriterCapability(snap: Snapshot, op: String,
+      adds: Boolean, removes: Boolean,
       rewrites: Boolean, emitsCdc: Boolean = false,
       removesWholeFiles: Boolean = false,
       rowIdsHandled: Boolean = false): Unit = {
     def refuse(what: String): Nothing =
       throw graft.GraftError.InvalidOperation(op,
-        s"$tbl requires an unsupported writer capability ($what); " +
+        s"${snap.tbl} requires an unsupported writer capability ($what); " +
           "mutating it without honoring that feature would corrupt the " +
           "table for its other readers and writers")
-    val (v, feats) = tableWriterProtocol(spark, fs, tbl)
+    val (_, v, _, feats) = snap.protocol
     if (v > 7) refuse(s"protocol minWriterVersion $v")
     if (v == 7) {
       val conditional = Set("changeDataFeed", "generatedColumns",
@@ -2493,7 +2132,7 @@ object DeltaLog {
       if (unsupported.nonEmpty)
         refuse(s"writerFeatures ${unsupported.mkString("[", ", ", "]")}")
     }
-    val conf = tableConfiguration(spark, fs, tbl)
+    val conf = snap.configuration
     // emitsCdc: the caller writes _change_data files + cdc actions for
     // this commit (deleteWhere/upsert on plain tables), so the CDF
     // contract is honored, not broken.
@@ -2982,38 +2621,6 @@ object DeltaLog {
     readChanges(spark, path, startV - 1, endV)
   }
 
-  /** Stats-surviving subset of `adds` for `predicate` — the conservative
-    * skipping kernel [[readWhere]] applies, reused by the copy-on-write
-    * DISCOVERY scans. Returns the ORIGINAL entries (mapped tables remap
-    * stats/partition keys only for the decision); a missing schema keeps
-    * everything.
-    */
-  private def pruneAddsFor(spark: SparkSession, path: String,
-      predicate: String,
-      adds: Seq[DeltaStats.AddEntry]): Seq[DeltaStats.AddEntry] = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    parsedTableSchema(spark, fs, tbl) match {
-      case Some(schema) =>
-        val mapped = logicalSchemaIfMapped(spark, fs, tbl).map(_._2)
-        val logicalAdds = mapped match {
-          case Some(logical) => remapAddsToLogical(adds, logical)
-          case None => adds
-        }
-        val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-        val pcols = mapped match {
-          case Some(logical) =>
-            val m = physToLogMap(logical)
-            pcols0.map(c => m.getOrElse(c, c))
-          case None => pcols0
-        }
-        val keptRels = DeltaStats.prune(spark, predicate, schema, pcols,
-          logicalAdds).map(_.rel).toSet
-        adds.filter(a => keptRels(a.rel))
-      case None => adds
-    }
-  }
-
   /** Conservative discovery predicate for a MERGE's update keys: per-key
     * `BETWEEN min AND max` bounds, ANDed — files whose stats fall outside
     * every key's range provably contain no matched row. Emitted only when
@@ -3073,20 +2680,19 @@ object DeltaLog {
     * dataChange=false restages (OPTIMIZE/PURGE) read no rows
     * semantically, so winner adds never conflict with them.
     */
-  private def requireNoLogicalConflict(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, path: String, op: String, w: Long,
+  private def requireNoLogicalConflict(snap: Snapshot, op: String, w: Long,
       ourRemoves: Set[String], dataChange: Boolean,
       readPredicate: Option[String]): Unit = {
     def conflict(detail: String): Nothing =
-      throw graft.GraftError.ConcurrentModification(path, op.toLowerCase,
+      throw graft.GraftError.ConcurrentModification(snap.path, op.toLowerCase,
         s"version $w $detail")
     import com.fasterxml.jackson.databind.ObjectMapper
     val mapper = new ObjectMapper()
-    val schemaOpt = parsedTableSchema(spark, fs, tbl)
-    val pcols = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
+    val schemaOpt = snap.schema
+    val pcols = snap.partitionColumns.getOrElse(Nil)
     val conj = readPredicate.flatMap(p =>
-      schemaOpt.flatMap(_ => DeltaStats.parseConjuncts(spark, p)))
-    readString(fs, new HPath(logDir(tbl), commitName(w)))
+      schemaOpt.flatMap(_ => DeltaStats.parseConjuncts(snap.spark, p)))
+    readString(snap.fs, new HPath(snap.log, commitName(w)))
       .linesIterator.foreach { line =>
       val node = try mapper.readTree(line) catch { case _: Exception => null }
       if (node != null) {
@@ -3124,7 +2730,7 @@ object DeltaLog {
   private[sources] var commitSlotTestHook: Option[(String, Long) => Unit] =
     None
 
-  private def commitRewrite(spark: SparkSession, path: String, op: String,
+  private def commitRewrite(snap: Snapshot, op: String,
       removesRel: Seq[String], addDf: DataFrame,
       checkpointInterval: Int = 10, dataChange: Boolean = true,
       numFiles: Option[Int] = None, logicalFrame: Boolean = true,
@@ -3133,13 +2739,15 @@ object DeltaLog {
       cdcDf: Option[DataFrame] = None,
       extraMetaData: Option[String] = None,
       readPredicate: Option[String] = None): Unit = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val log = logDir(tbl)
+    val spark = snap.spark
+    val path = snap.path
+    val tbl = snap.tbl
+    val fs = snap.fs
+    val log = snap.log
     val version = nextVersion(fs, log).getOrElse(
       throw graft.GraftError.InvalidOperation(op.toLowerCase,
         s"$path is not a delta table (no _delta_log)"))
-    val partitionBy = latestPartitionColumns(fs, log).getOrElse(Nil)
+    val partitionBy = snap.partitionColumns.getOrElse(Nil)
     // mapped tables: the rewrite stages under PHYSICAL column names (the
     // same logical->physical rename the append path applies) — and, for
     // id-mode tables, with parquet.field.id metadata so Spark's field-id
@@ -3151,7 +2759,7 @@ object DeltaLog {
     // logicalFrame = false: the caller (optimize) already holds the
     // file-native PHYSICAL columns and restages them unchanged
     val mappedInfo: Option[(String, StructType)] =
-      if (logicalFrame) logicalSchemaIfMapped(spark, fs, tbl) else None
+      if (logicalFrame) snap.logicalIfMapped else None
     val idMapped = mappedInfo.exists(_._1 == "id")
     val renamed = mappedInfo match {
       case Some((mode, logical)) =>
@@ -3266,9 +2874,9 @@ object DeltaLog {
     val stagedRels = staged.keys.toSeq.sorted
     val statsByRel = statsForAll(spark, fs, tbl, stagedRels)
     def actionsFor(v: Long): String = {
+      val cur = snap.forCommit(v)
       val actions = ListBuffer.empty[String]
-      actions += commitInfoJson(op, txnId, fs, tbl,
-        tableConfiguration(spark, fs, tbl))
+      actions += commitInfoJson(op, txnId, fs, tbl, cur.configuration)
       // metaData refresh riding a rewrite commit (identity high-water
       // mark bumps) — the caller supplies the full action
       extraMetaData.foreach(actions += _)
@@ -3299,10 +2907,10 @@ object DeltaLog {
       // Re-read per attempt: a rebase may follow a concurrent writer
       // who advanced the mark.
       val rowIdsByRel: Map[String, Long] =
-        if (!rowTrackingEnabled(tableConfiguration(spark, fs, tbl))) Map.empty
+        if (!rowTrackingEnabled(cur.configuration)) Map.empty
         else {
           val (byRel, newHwm) = assignBaseRowIds(fs, tbl, stagedRels,
-            statsByRel, rowIdHighWaterMark(spark, fs, tbl))
+            statsByRel, cur.rowIdHighWaterMark)
           actions += domainMetadataAction(newHwm)
           byRel
         }
@@ -3328,7 +2936,7 @@ object DeltaLog {
       if (acquireCommitSlot(fs, log, v, txnId, actionsFor(v))) committed = true
       else {
         existingVersions(fs, log).filter(_ >= v).foreach(w =>
-          requireNoLogicalConflict(spark, fs, tbl, path, op, w,
+          requireNoLogicalConflict(snap, op, w,
             removesRel.toSet, dataChange, readPredicate))
         v = math.max(v + 1, nextVersion(fs, log).getOrElse(0L))
       }
@@ -3349,7 +2957,7 @@ object DeltaLog {
     * is what keeps a long-lived 100 TB table's log replay bounded.
     *
     * The active set comes from the same VERSION-ORDERED replay the
-    * readers use ([[activeAddsAsOf]]): a path removed and later RE-ADDED
+    * readers use ([[Snapshot]]): a path removed and later RE-ADDED
     * (RESTORE; a DV delete's remove+re-add of the same file) must end
     * active, and per path the NEWEST add row wins — which is also what
     * carries a deletion-vector descriptor through the fold, so DV-bearing
@@ -3452,19 +3060,21 @@ object DeltaLog {
     // (newest per domain — row tracking's high-water mark survives), so
     // row-tracked tables checkpoint fine (rowIdsHandled); an unknown v7
     // feature hanging state off other action kinds still refuses.
-    requireWriterCapability(spark, fs, tbl, "write_checkpoint",
+    val snap = Snapshot(spark, path, Some(version), snapshotDriverMaxBytes)
+    requireWriterCapability(snap, "write_checkpoint",
       adds = false, removes = false, rewrites = true,
       rowIdsHandled = true)
     val log = logDir(tbl)
     // checkpointProtection: REWRITING a checkpoint below the boundary is
     // forbidden (it may have been produced by a history-compaction this
     // replay cannot reproduce); fresh checkpoints at/above it are fine
-    if (version < checkpointProtectionVersion(spark, fs, tbl) &&
-        (checkpointPaths(fs, log, version).nonEmpty ||
-          v2ManifestPath(fs, log, version).isDefined))
+    val listing = logListing(fs, log)
+    if (version < checkpointProtectionVersion(snap) &&
+        (checkpointPaths(listing, version).nonEmpty ||
+          v2ManifestPath(listing, version).isDefined))
       throw graft.GraftError.InvalidOperation("write_checkpoint",
         s"$tbl protects checkpoints below version " +
-          s"${checkpointProtectionVersion(spark, fs, tbl)} " +
+          s"${checkpointProtectionVersion(snap)} " +
           "(delta.requireCheckpointProtectionBeforeVersion) — the " +
           s"version-$version checkpoint cannot be rewritten")
     // sources: the previous checkpoint (older commits may be gone) plus
@@ -3473,10 +3083,11 @@ object DeltaLog {
     // (tombstone-expiry rewrites, racing checkpointers) must seed from
     // that checkpoint itself — its folded commits may be cleaned up, so
     // a `<` filter would silently fold from the surviving tail only and
-    // drop every older add
-    val prevCp = lastCheckpointVersion(fs, log).filter(_ <= version)
-    val prev = prevCp.flatMap(v => readCheckpoint(spark, fs, log, v))
-    val commits = existingVersions(fs, log)
+    // drop every older add. The snapshot at `version` already opened
+    // exactly that checkpoint.
+    val prevCp = snap.checkpointVersion
+    val prev = snap.checkpointFrame
+    val commits = commitVersions(listing)
       .filter(v => v <= version && prevCp.forall(v > _))
       .map(v => new HPath(log, commitName(v)).toString)
     // a same-version REWRITE folds from the checkpoint alone — zero
@@ -3490,24 +3101,11 @@ object DeltaLog {
     def part(df: DataFrame, c: String): Option[DataFrame] =
       if (df.columns.contains(c)) Some(df.where(col(c).isNotNull).select(col(c)))
       else None
-    // survivor set: above the log-size threshold the fold runs
-    // DISTRIBUTEDLY and the semi/anti-joins below consume its DataFrame
-    // — the driver holds ONE count, never a LocalRelation of the add
-    // set (a 10⁷-file table's path list alone is ~GBs); small logs keep
-    // the driver fold (cheaper than three extra jobs over the log)
-    val sess = spark
-    import sess.implicits._
-    val (activeDf, activeCount): (DataFrame, Long) =
-      if (snapshotLogBytes(fs, log, Some(version)) > snapshotDriverMaxBytes) {
-        val snap = activeAddsDfAsOf(spark, path, Some(version))
-          .map(_.select(col("graft_path").as("graft_active_path"))
-            .localCheckpoint(true)) // consumed 3× (semi, anti, count)
-          .getOrElse(Seq.empty[String].toDF("graft_active_path"))
-        (snap, snap.count())
-      } else {
-        val activeRels = activeAddsAsOf(spark, path, Some(version)).map(_.rel)
-        (activeRels.toDF("graft_active_path"), activeRels.length.toLong)
-      }
+    // survivor set: on a large log the semi/anti-joins below consume
+    // the distributed fold — the driver holds ONE count, never a
+    // LocalRelation of the add set (a 10⁷-file table's path list alone
+    // is ~GBs)
+    val (activeDf, activeCount) = snap.activePathFrame
     // recency: previous-checkpoint rows are older than every replayed
     // commit; commit rows rank by their version (from the file name)
     // both sides canonicalize BEFORE the union: a previous checkpoint
@@ -3548,8 +3146,7 @@ object DeltaLog {
     // concurrent-reader / foreign-vacuum protection), and a shorter one
     // may trim them sooner
     val effectiveRetentionMs =
-      tableConfiguration(spark, fs, tbl)
-        .get("delta.deletedFileRetentionDuration")
+      snap.configuration.get("delta.deletedFileRetentionDuration")
         .flatMap(parseDeltaInterval)
         .getOrElse(removeRetentionMs)
     val removeCutoff = System.currentTimeMillis() - effectiveRetentionMs
@@ -3637,8 +3234,7 @@ object DeltaLog {
     // sidecar parquets (written distributed, nParts ways) while a tiny
     // UUID-named manifest carries the non-file actions + sidecar refs.
     // Plain tables keep the classic single/multi-part layout.
-    val v2Table = tableWriterProtocol(spark, fs, tbl)._2
-      .contains("v2Checkpoint")
+    val v2Table = snap.protocol._4.contains("v2Checkpoint")
     val nParts = math.max(1,
       math.ceil(activeCount.toDouble / math.max(1, rowsPerPart)).toInt)
     val tmpDir = new HPath(log, s".cp_tmp_$version")
@@ -3650,8 +3246,8 @@ object DeltaLog {
       // one task
       // a re-checkpointed version must not leave stale CLASSIC files
       // behind — readCheckpoint prefers them over the fresh manifest
-      checkpointPaths(fs, log, version)
-        .foreach(p => fs.delete(new HPath(p), false))
+      checkpointPaths(logListing(fs, log), version)
+        .foreach(p => fs.delete(p.getPath, false))
       // FILE actions — adds AND remove tombstones — are what sidecars
       // carry per the protocol; non-file actions stay in the manifest
       val fileCols = Seq("add", "remove").filter(snapshot.columns.contains)
@@ -3743,7 +3339,8 @@ object DeltaLog {
       throw new IllegalStateException("checkpoint write produced no part file")
     classicParts = written.size
     // clear any stale files of a re-checkpointed version (either layout)
-    checkpointPaths(fs, log, version).foreach(p => fs.delete(new HPath(p), false))
+    checkpointPaths(logListing(fs, log), version)
+      .foreach(p => fs.delete(p.getPath, false))
     if (written.size == 1 && nParts == 1) {
       val cpFile = new HPath(log, f"$version%020d.checkpoint.parquet")
       if (!fs.rename(written.head.getPath, cpFile))
@@ -3774,32 +3371,38 @@ object DeltaLog {
     finally lc.close()
   }
 
-  /** Parquet path(s) of checkpoint `v`: the classic single
+  /** The `_delta_log` directory listing (empty when there is no log) —
+    * taken once per snapshot and handed to the checkpoint resolvers.
+    */
+  private def logListing(fs: FileSystem, log: HPath): Seq[FileStatus] =
+    if (fs.exists(log)) fs.listStatus(log).toSeq else Nil
+
+  /** Commit versions present in a log listing, ascending. */
+  private def commitVersions(listing: Seq[FileStatus]): Seq[Long] =
+    listing.map(_.getPath.getName).filter(_.matches("\\d{20}\\.json"))
+      .map(_.stripSuffix(".json").toLong).sorted
+
+  /** Part file(s) of checkpoint `v` in a log listing: the classic single
     * `%020d.checkpoint.parquet` or the multi-part
     * `%020d.checkpoint.%010d.%010d.parquet` layout (what real delta
-    * writes for big snapshots — and what we write past
-    * [[CheckpointRowsPerPart]] active files, because a single-file
-    * checkpoint serializes O(active files) rows through ONE task).
-    * Empty when the version has no checkpoint files.
+    * writes for big snapshots — and what we write past `rowsPerPart`
+    * active files, because a single-file checkpoint serializes O(active
+    * files) rows through ONE task). Empty when the version has no
+    * classic checkpoint files.
     */
-  private def checkpointPaths(fs: FileSystem, log: HPath,
-      v: Long): Seq[String] = {
-    val single = new HPath(log, f"$v%020d.checkpoint.parquet")
-    if (fs.exists(single)) Seq(single.toString)
-    else if (!fs.exists(log)) Nil
-    else {
-      val prefix = f"$v%020d.checkpoint."
-      fs.listStatus(log).toSeq.map(_.getPath)
-        .filter { p =>
-          // multi-part segments are NUMERIC (`.o.p.parquet`) — a v2
-          // manifest's UUID segment must NOT be misread as a classic
-          // part (its file actions live in sidecars, not in it)
-          p.getName.startsWith(prefix) && p.getName.endsWith(".parquet") &&
-            p.getName.stripPrefix(prefix).stripSuffix(".parquet")
-              .split('.').forall(s => s.nonEmpty && s.forall(_.isDigit))
-        }
-        .sortBy(_.getName).map(_.toString)
-    }
+  private def checkpointPaths(listing: Seq[FileStatus],
+      v: Long): Seq[FileStatus] = {
+    val prefix = f"$v%020d.checkpoint."
+    listing.filter { s =>
+      // multi-part segments are NUMERIC (`.o.p.parquet`) — a v2
+      // manifest's UUID segment must NOT be misread as a classic part
+      // (its file actions live in sidecars, not in it)
+      val n = s.getPath.getName
+      n == prefix + "parquet" ||
+        (n.startsWith(prefix) && n.endsWith(".parquet") &&
+          n.stripPrefix(prefix).stripSuffix(".parquet")
+            .split('.').forall(s => s.nonEmpty && s.forall(_.isDigit)))
+    }.sortBy(_.getPath.getName)
   }
 
   /** V2 (UUID-named) checkpoint manifest of version `v`, if any:
@@ -3808,13 +3411,11 @@ object DeltaLog {
     * writers raced the checkpoint) describe the same snapshot; the
     * name-sorted first is picked deterministically.
     */
-  private def v2ManifestPath(fs: FileSystem, log: HPath,
-      v: Long): Option[HPath] = {
-    if (!fs.exists(log)) return None
+  private def v2ManifestPath(listing: Seq[FileStatus],
+      v: Long): Option[FileStatus] = {
     val prefix = f"$v%020d.checkpoint."
-    fs.listStatus(log).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
+    listing.filter { s =>
+        val n = s.getPath.getName
         n.startsWith(prefix) &&
           (n.endsWith(".parquet") || n.endsWith(".json")) && {
             val stem = n.stripPrefix(prefix)
@@ -3827,7 +3428,7 @@ object DeltaLog {
             stem.matches("[0-9a-fA-F-]{32,36}") && !stem.forall(_.isDigit)
           }
       }
-      .sortBy(_.getName).headOption
+      .sortBy(_.getPath.getName).headOption
   }
 
   /** Sidecar files a v2 manifest references, resolved against
@@ -3862,10 +3463,12 @@ object DeltaLog {
     * version has no checkpoint files.
     */
   private def readCheckpoint(spark: SparkSession, fs: FileSystem,
-      log: HPath, v: Long): Option[DataFrame] = {
-    val paths = checkpointPaths(fs, log, v)
+      log: HPath, v: Long,
+      listing: Seq[FileStatus] = Nil): Option[DataFrame] = {
+    val files = if (listing.nonEmpty) listing else logListing(fs, log)
+    val paths = checkpointPaths(files, v).map(_.getPath.toString)
     if (paths.nonEmpty) return Some(spark.read.parquet(paths: _*))
-    v2ManifestPath(fs, log, v).map { m =>
+    v2ManifestPath(files, v).map(_.getPath).map { m =>
       val manifest =
         if (m.getName.endsWith(".json")) spark.read.json(m.toString)
         else spark.read.parquet(m.toString)
@@ -3887,12 +3490,9 @@ object DeltaLog {
     } catch { case _: Exception => None }
   }
 
-  /** Table dir has a delta log → snapshot = adds − removes, replayed from
-    * the newest checkpoint (if any) plus only the commits after it — old
-    * commits may have been cleaned up. Parsing uses Spark's own JSON/
-    * parquet readers (tiny driver-side jobs, no extra dependency); our
-    * writer never emits removes but replaying them keeps the reader
-    * correct on logs other writers produced.
+  /** Active data files (qualified against `path`) of the latest snapshot —
+    * snapshot = adds − removes, replayed from the newest checkpoint plus
+    * only the commits after it (see [[Snapshot]]).
     */
   def activeFiles(spark: SparkSession, path: String): Seq[String] =
     activeFilesAsOf(spark, path, None)
@@ -3908,24 +3508,16 @@ object DeltaLog {
     activeAddsAsOf(spark, path, versionAsOf)
       .map(a => new HPath(new HPath(path), a.rel).toString)
 
-  /** Active data-file paths (qualified against `path`), with the
-    * snapshot folded DISTRIBUTEDLY above the log-size threshold: the
-    * driver collects only the path list — the irreducible input to a
-    * file scan — never every add's stats/partitionValues metadata
-    * ([[activeAddsAsOf]]'s driver shape, GBs at ~10⁶ files). The
-    * declared-schema delta load (Loaders) lists through this.
+  /** Active data-file paths (qualified against `path`); above the
+    * log-size threshold the driver collects only the path-level entries
+    * — the irreducible input to a file scan — never every add's
+    * stats/partitionValues metadata. The declared-schema delta load
+    * (Loaders) lists through this.
     */
   def activeFilePathsScalable(spark: SparkSession, path: String,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Seq[String] = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(logDir(tbl)) &&
-        snapshotLogBytes(fs, logDir(tbl), None) > snapshotDriverMaxBytes)
-      activeAddsDfAsOf(spark, path, None).map(
-        _.select("graft_path").collect().toSeq
-          .map(r => new HPath(tbl, r.getString(0)).toString))
-        .getOrElse(Nil)
-    else activeFiles(spark, path)
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    snap.addsWhere(lean = true).map(a => new HPath(snap.tbl, a.rel).toString)
   }
 
   /** One `add` action's JSON node parsed to the typed entry the reader
@@ -3955,399 +3547,510 @@ object DeltaLog {
         .map(_.asLong)))
   }
 
-  /** Full `add` metadata (partition values, stats, size) of the active
-    * snapshot — the input to stats-based file skipping
-    * ([[DeltaStats.prune]]) and to [[optimize]]'s bin packing.
+  /** The `add` action value of an entry (the inverse of
+    * [[parseAddEntry]]), stamped with `modificationTime` — what RESTORE
+    * and DV deletes re-commit for an existing file.
+    */
+  private def addJson(a: DeltaStats.AddEntry, modificationTime: Long): String = {
+    val pv = a.partitionValues.map { case (k, v) =>
+      s""""${esc(k)}":${if (v == null) "null" else "\"" + esc(v) + "\""}"""
+    }.mkString("{", ",", "}")
+    val stats = a.stats.map(js => s""","stats":"${esc(js)}"""").getOrElse("")
+    // row tracking: a re-committed file is the SAME physical file — its
+    // baseRowId/defaultRowCommitVersion echo so positional ids survive
+    val rowIds = (a.baseRowId, a.defaultRowCommitVersion) match {
+      case (Some(b), Some(v)) => s""","baseRowId":$b,"defaultRowCommitVersion":$v"""
+      case _ => ""
+    }
+    val dv = a.dv.map(d => s""","deletionVector":${dvDescriptorJson(d)}""")
+      .getOrElse("")
+    s"""{"path":"${esc(a.rel)}","partitionValues":$pv,""" +
+      s""""size":${a.size},"modificationTime":$modificationTime,""" +
+      s""""dataChange":true$stats$rowIds$dv}"""
+  }
+
+  /** Full `add` metadata (partition values, stats, size) of the snapshot
+    * at `versionAsOf`, folded on the driver — the input to stats-based
+    * file skipping ([[DeltaStats.prune]]) and the reference the
+    * distributed fold ([[activeAddsDfAsOf]]) is checked against.
     */
   def activeAddsAsOf(spark: SparkSession, path: String,
-      versionAsOf: Option[Long] = None): Seq[DeltaStats.AddEntry] = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val log = logDir(tbl)
-    versionAsOf.foreach { v =>
-      if (!fs.exists(new HPath(log, commitName(v))))
-        throw graft.GraftError.InvalidOperation("load_delta",
-          s"version $v does not exist in $path (versions: " +
-            s"${existingVersions(fs, log).mkString(", ")})")
-    }
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def entryOf(node: com.fasterxml.jackson.databind.JsonNode) =
-      parseAddEntry(node)
-    val cpVersion = lastCheckpointVersion(fs, log)
-      .filter(cp => versionAsOf.forall(cp <= _))
-    // checkpoint adds round-trip through to_json so commit-line adds and
-    // checkpointed adds parse identically (stats stays the JSON string the
-    // writer recorded)
-    val cpAdds: Seq[DeltaStats.AddEntry] = cpVersion.toSeq.flatMap { v =>
-      val cp = readCheckpoint(spark, fs, log, v).getOrElse(
-        throw graft.GraftError.InvalidOperation("load_delta",
-          s"$path: _last_checkpoint names version $v but no checkpoint " +
-            "parquet files exist"))
-      if (cp.columns.contains("add"))
-        cp.where(col("add").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("add")))
-          .collect().flatMap { r =>
-            val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-            Option(node).flatMap(entryOf)
-          }.toSeq
-      else Nil
-    }
-    val commits = existingVersions(fs, log)
-      .filter(v => cpVersion.forall(v > _) && versionAsOf.forall(v <= _))
-    if (commits.isEmpty && cpAdds.isEmpty) return Nil
-    // Fold commits in VERSION ORDER — a path removed at v2 and re-added at
-    // v5 (RESTORE does exactly this) must end active; a global
-    // adds-minus-removes set would keep it dead forever. Driver-side
-    // Jackson parse: commit files are tiny, and checkpoints bound how many
-    // replay.
-    val active = scala.collection.mutable.LinkedHashMap.empty[String, DeltaStats.AddEntry]
-    cpAdds.foreach(a => active(a.rel) = a)
-    // Protocol-fidelity guards: a table written under a newer reader
-    // protocol would be silently MISREAD by plain adds-minus-removes
-    // replay — physical column names returned raw (id-mode column
-    // mapping), unknown features' semantics ignored. Refusing typed is
-    // the correct behavior on an unsupported capability (what
-    // delta-spark/delta-rs do). Supported here: minReaderVersion 1;
-    // minReaderVersion 2 (column mapping — NAME mode handled at read
-    // time via the metaData rename, id mode refused below); and
-    // minReaderVersion 3 when readerFeatures ⊆ [[SupportedReaderFeatures]]
-    // (DV descriptors are parsed onto the add entries
-    // and applied as a row filter at scan — see applyDeletionVectors;
-    // write/maintenance paths refuse on DV-bearing snapshots).
-    def guard(cond: Boolean, what: => String): Unit =
-      if (cond) throw graft.GraftError.InvalidOperation("load_delta",
-        s"$path requires an unsupported reader capability ($what); " +
-          "reading it with plain add/remove replay would return wrong rows")
-    def guardProtocol(node: com.fasterxml.jackson.databind.JsonNode): Unit = {
-      val v = Option(node.get("minReaderVersion")).map(_.asInt(1)).getOrElse(1)
-      if (v >= 3) {
-        val feats = scala.collection.mutable.ArrayBuffer.empty[String]
-        Option(node.get("readerFeatures")).filter(_.isArray)
-          .foreach(_.forEach(f => feats += f.asText))
-        val unsupported =
-          feats.filterNot(SupportedReaderFeatures)
-        guard(v > 3 || unsupported.nonEmpty,
-          s"protocol minReaderVersion $v, readerFeatures " +
-            feats.mkString("[", ", ", "]"))
-      }
-    }
-    val cmMode = columnMappingMode(spark, fs, tbl)
-    guard(cmMode != "none" && cmMode != "name" && cmMode != "id",
-      s"column mapping mode '$cmMode'")
-    cpVersion.foreach { v =>
-      val cp = readCheckpoint(spark, fs, log, v).getOrElse(
-        throw graft.GraftError.InvalidOperation("load_delta",
-          s"$path: _last_checkpoint names version $v but no checkpoint " +
-            "parquet files exist"))
-      if (cp.columns.contains("protocol")) {
-        cp.where(col("protocol").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("protocol")))
-          .collect().foreach { r =>
-            val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-            if (node != null) guardProtocol(node)
-          }
-      }
-    }
-    commits.foreach { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.foreach { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        if (node != null) {
-          val add = node.get("add")
-          val rem = node.get("remove")
-          val proto = node.get("protocol")
-          val meta = node.get("metaData")
-          if (proto != null) guardProtocol(proto)
-          if (meta != null && meta.get("configuration") != null) {
-            val cm = meta.get("configuration").get("delta.columnMapping.mode")
-            guard(cm != null && cm.asText("none") != "none" &&
-              cm.asText("none") != "name" && cm.asText("none") != "id",
-              s"column mapping mode '${Option(cm).map(_.asText).getOrElse("")}'")
-          }
-          if (add != null) entryOf(add).foreach(a => active(a.rel) = a)
-          if (rem != null && rem.get("path") != null) active -= rem.get("path").asText
-        }
-      }
-    }
-    active.values.toSeq
-  }
+      versionAsOf: Option[Long] = None): Seq[DeltaStats.AddEntry] =
+    Snapshot(spark, path, versionAsOf, Long.MaxValue).addsWhere()
 
-  /** Bytes of log state a snapshot fold must consume: the checkpoint
-    * parquet part files plus the post-checkpoint commit JSONs (listing
-    * lengths only — no content reads). The routing signal for
-    * [[read]]'s driver-vs-distributed snapshot reconstruction.
-    */
-  private def snapshotLogBytes(fs: FileSystem, log: HPath,
-      versionAsOf: Option[Long]): Long = {
-    val cpVersion = lastCheckpointVersion(fs, log)
-      .filter(cp => versionAsOf.forall(cp <= _))
-    val cpBytes = cpVersion.toSeq.flatMap { v =>
-      val classic = checkpointPaths(fs, log, v)
-        .map(p => fs.getFileStatus(new HPath(p)).getLen)
-      if (classic.nonEmpty) classic
-      else v2ManifestPath(fs, log, v).toSeq.flatMap { m =>
-        // v2: manifest + the _sidecars listing (over-counts sidecars
-        // shared with older checkpoints — the conservative direction:
-        // big sidecar sets route to the DISTRIBUTED fold, and the
-        // listing stays metadata-only, no manifest read here)
-        val sidecarsDir = new HPath(log, "_sidecars")
-        fs.getFileStatus(m).getLen +:
-          (if (fs.exists(sidecarsDir))
-            fs.listStatus(sidecarsDir).toSeq.map(_.getLen)
-          else Nil)
-      }
-    }.sum
-    val commitBytes = existingVersions(fs, log)
-      .filter(v => cpVersion.forall(v > _) && versionAsOf.forall(v <= _))
-      .map(v => fs.getFileStatus(new HPath(log, commitName(v))).getLen).sum
-    cpBytes + commitBytes
-  }
-
-  /** Past this many bytes of log state, [[read]] reconstructs the
-    * snapshot DISTRIBUTEDLY ([[activeAddsDfAsOf]]) instead of the
-    * driver-side fold: at 10⁷ active files the full add metadata (stats
-    * JSON, partition maps) is gigabytes of driver heap per snapshot,
-    * while the distributed route keeps the driver to the bare file-path
-    * list (the irreducible input to Spark's parquet scan) plus the
-    * DV-bearing entries. 64 MB of raw log ≈ a few 10⁵ add actions —
-    * small logs stay on the zero-job fast path.
+  /** Past this many bytes of log state, a [[Snapshot]] folds the active
+    * set DISTRIBUTEDLY instead of on the driver: at 10⁷ active files the
+    * full add metadata (stats JSON, partition maps) is gigabytes of
+    * driver heap per snapshot, while the distributed route keeps the
+    * driver to the path-level entries a scan needs. 64 MB of raw log ≈ a
+    * few 10⁵ add actions — small logs stay on the two-job driver fold.
     */
   private[sources] val SnapshotDriverMaxBytes: Long = 64L << 20
 
-  /** Distributed snapshot fold — the same newest-per-path,
-    * version-ordered semantics as [[activeAddsAsOf]] (remove-then-re-add
-    * revival included) expressed as a DataFrame plan over the checkpoint
-    * parquet ∪ post-checkpoint commit JSONs, so reconstructing a 10⁷-file
-    * snapshot never materializes add metadata on the driver. Columns:
-    * `graft_path` (the add's relative path) and `graft_add` (the full
-    * add action as a JSON string). Protocol/column-mapping guards run
-    * on the tiny protocol/metaData action subsets (driver-collected —
-    * a handful of rows regardless of table size). Returns None when the
-    * log has no state at the requested version.
+  /** The distributed snapshot fold as of `versionAsOf`: columns
+    * `graft_path` (the add's relative path) and `graft_add` (the full add
+    * action as a JSON string); None when the log has no state at that
+    * version.
     */
   private[sources] def activeAddsDfAsOf(spark: SparkSession, path: String,
-      versionAsOf: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{input_file_name, regexp_extract, row_number, to_json}
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val log = logDir(tbl)
-    versionAsOf.foreach { v =>
-      if (!fs.exists(new HPath(log, commitName(v))))
-        throw graft.GraftError.InvalidOperation("load_delta",
-          s"version $v does not exist in $path (versions: " +
-            s"${existingVersions(fs, log).mkString(", ")})")
-    }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def guardJson(json: String, kind: String): Unit = {
-      val node = try mapper.readTree(json) catch { case _: Exception => null }
-      if (node == null) ()
-      else if (kind == "protocol") {
-        val v = Option(node.get("minReaderVersion")).map(_.asInt(1)).getOrElse(1)
-        if (v >= 3) {
-          val feats = scala.collection.mutable.ArrayBuffer.empty[String]
-          Option(node.get("readerFeatures")).filter(_.isArray)
-            .foreach(_.forEach(f => feats += f.asText))
-          val unsupported = feats.filterNot(SupportedReaderFeatures)
-          if (v > 3 || unsupported.nonEmpty)
-            throw graft.GraftError.InvalidOperation("load_delta",
-              s"$path requires an unsupported reader capability (protocol " +
-                s"minReaderVersion $v, readerFeatures " +
-                feats.mkString("[", ", ", "]") + "); reading it with plain " +
-                "add/remove replay would return wrong rows")
-        }
-      } else { // metaData: column-mapping mode gate
-        val cm = Option(node.get("configuration"))
-          .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-          .map(_.asText("none")).getOrElse("none")
-        if (cm != "none" && cm != "name" && cm != "id")
-          throw graft.GraftError.InvalidOperation("load_delta",
-            s"$path requires an unsupported reader capability (column " +
-              s"mapping mode '$cm'); reading it with plain add/remove " +
-              "replay would return wrong rows")
-      }
-    }
-    val cpVersion = lastCheckpointVersion(fs, log)
-      .filter(cp => versionAsOf.forall(cp <= _))
-    val commits = existingVersions(fs, log)
-      .filter(v => cpVersion.forall(v > _) && versionAsOf.forall(v <= _))
-    val cp = cpVersion.flatMap(v => readCheckpoint(spark, fs, log, v))
-    val logF =
-      if (commits.isEmpty) None
-      else Some(spark.read.json(
-          commits.map(v => new HPath(log, commitName(v)).toString): _*)
-        .withColumn("graft_rec", regexp_extract(input_file_name(),
-          "(\\d{20})\\.json", 1).cast("long")))
-    if (cp.isEmpty && logF.isEmpty) return None
-    def subset(df: DataFrame, c: String): Option[DataFrame] =
-      if (df.columns.contains(c)) Some(df.where(col(c).isNotNull)) else None
-    // guards: protocol rows and metaData configuration — a handful of
-    // rows per log, collected from the distributed read, never O(files)
-    (cp.toSeq.flatMap(subset(_, "protocol")) ++
-        logF.toSeq.flatMap(subset(_, "protocol"))).foreach { df =>
-      df.select(to_json(col("protocol"))).collect()
-        .foreach(r => guardJson(r.getString(0), "protocol"))
-    }
-    (cp.toSeq.flatMap(subset(_, "metaData")) ++
-        logF.toSeq.flatMap(subset(_, "metaData"))).foreach { df =>
-      df.select(to_json(col("metaData"))).collect()
-        .foreach(r => guardJson(r.getString(0), "metaData"))
-    }
-    // fold rows: (path, recency, isAdd, add-json). Checkpoint rows are
-    // older than every replayed commit (rec = -1); within one commit a
-    // remove+re-add of the same path resolves to the add (isAdd desc),
-    // matching the line-ordered driver fold on our writer's layout
-    // (removes precede adds within a commit).
-    val cpAddRows = cp.flatMap(subset(_, "add")).map(_.select(
-      col("add.path").as("graft_path"), to_json(col("add")).as("graft_add"),
-      lit(-1L).as("graft_rec"), lit(1).as("graft_isadd")))
-    val commitAddRows = logF.flatMap(subset(_, "add")).map(_.select(
-      col("add.path").as("graft_path"), to_json(col("add")).as("graft_add"),
-      col("graft_rec"), lit(1).as("graft_isadd")))
-    val commitRemoveRows = logF.flatMap(subset(_, "remove")).map(_.select(
-      col("remove.path").as("graft_path"),
-      lit(null: String).as("graft_add"),
-      col("graft_rec"), lit(0).as("graft_isadd")))
-    val rows = (cpAddRows.toSeq ++ commitAddRows.toSeq ++ commitRemoveRows.toSeq)
-      .reduceOption(_.unionByName(_))
-    rows.map { u =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("graft_path"))
-        .orderBy(col("graft_rec").desc, col("graft_isadd").desc)
-      u.withColumn("graft_rn", row_number().over(w))
-        .where(col("graft_rn") === 1 && col("graft_isadd") === 1)
-        .select(col("graft_path"), col("graft_add"))
-    }
-  }
+      versionAsOf: Option[Long] = None): Option[DataFrame] =
+    Snapshot(spark, path, versionAsOf, -1L).addsFrame
 
-  /** Distributed-survivor kernel shared by every mutation/maintenance
-    * path: Some(dataset of the add-JSON lines that survive `predicate`
-    * stats pruning and the pure `keep` filter) when the log outgrows
-    * `snapshotDriverMaxBytes`, None when the driver fold is cheaper.
-    * Both filters run IN EXECUTORS — [[DeltaStats.entryMayMatch]] is
-    * session-free, the mapped-table stats-key remap
-    * ([[remapAddToLogical]]) is pure given the name map, and `keep` is
-    * required pure — so the driver never sees a pruned file's metadata.
-    */
-  private def keptAddJsonsDf(spark: SparkSession, path: String,
-      predicate: Option[String], keep: Option[DeltaStats.AddEntry => Boolean],
-      versionAsOf: Option[Long],
-      snapshotDriverMaxBytes: Long): Option[org.apache.spark.sql.Dataset[String]] = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(logDir(tbl)) ||
-        snapshotLogBytes(fs, logDir(tbl), versionAsOf) <= snapshotDriverMaxBytes)
-      return None
-    val snap = activeAddsDfAsOf(spark, path, versionAsOf).getOrElse(
-      throw new IllegalArgumentException(
-        s"loadDelta: empty or missing _delta_log in $path"))
-    val schemaOpt = parsedTableSchema(spark, fs, tbl, versionAsOf)
-    val physToLog: Option[Map[String, String]] =
-      logicalSchemaIfMapped(spark, fs, tbl).map(m => physToLogMap(m._2))
-    val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-    val pcols = physToLog match {
-      case Some(m) => pcols0.map(c => m.getOrElse(c, c))
-      case None => pcols0
-    }
-    val conjOpt = predicate.flatMap(p =>
-      schemaOpt.flatMap(_ => DeltaStats.parseConjuncts(spark, p)))
-    val sess = spark
-    import sess.implicits._
-    val entries = snap.select("graft_add").as[String]
-    Some(entries.mapPartitions { it =>
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      it.filter { addJson =>
-        val node = try mapper.readTree(addJson) catch { case _: Exception => null }
-        // unparseable add ⇒ keep (conservative, like the driver path)
-        Option(node).flatMap(parseAddEntry).forall { e0 =>
-          val statsKeep = (schemaOpt, conjOpt) match {
-            case (Some(schema), Some(conjuncts)) =>
-              val e = physToLog match {
-                case Some(m) => remapAddToLogical(e0, m, mapper)
-                case None => e0
-              }
-              DeltaStats.entryMayMatch(conjuncts, schema, pcols, e, mapper)
-            case _ => true
-          }
-          statsKeep && keep.forall(_(e0))
-        }
-      }
-    })
-  }
-
-  /** Active AddEntries as of `versionAsOf` that survive `predicate`
-    * stats pruning (all of them when None/unparseable) and the pure
-    * `keep` filter — with the log fold AND both filters run
-    * DISTRIBUTEDLY once the log outgrows `snapshotDriverMaxBytes`
-    * ([[keptAddJsonsDf]]). The driver materializes ONLY the surviving
-    * entries: the contract the copy-on-write mutations (upsert,
-    * deleteWhere, deleteWhereViaDv) and maintenance ops (optimize,
-    * purge, restore) need — their commits echo the touched/surviving
-    * files' metadata, which is O(candidates), never O(active files).
-    * Below the threshold the existing driver fold is cheaper and its
-    * behavior is unchanged.
+  /** Active AddEntries as of `versionAsOf` that survive `predicate` stats
+    * pruning and the pure `keep` filter ([[Snapshot.addsWhere]]); the
+    * driver materializes only the surviving entries once the log
+    * outgrows `snapshotDriverMaxBytes`.
     */
   private[graft] def activeAddsWhere(spark: SparkSession, path: String,
       predicate: Option[String] = None,
       keep: Option[DeltaStats.AddEntry => Boolean] = None,
       versionAsOf: Option[Long] = None,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Seq[DeltaStats.AddEntry] =
-    keptAddJsonsDf(spark, path, predicate, keep, versionAsOf,
-        snapshotDriverMaxBytes) match {
-      case Some(keptDs) =>
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        keptDs.collect().toSeq.flatMap { s =>
-          val node = try mapper.readTree(s) catch { case _: Exception => null }
-          Option(node).flatMap(parseAddEntry)
+    Snapshot(spark, path, versionAsOf, snapshotDriverMaxBytes)
+      .addsWhere(predicate, keep)
+
+  // ───────────────────────── snapshot ─────────────────────────
+
+  /** Action kinds a snapshot carries besides the file actions. */
+  private val StateActionKinds =
+    Seq("protocol", "metaData", "txn", "domainMetadata")
+
+  /** Driver-side replay of log actions in commit order: the newest
+    * protocol and metaData, the newest txn version per appId, the live
+    * domainMetadata per domain and — when `foldAdds` — the active adds
+    * (newest add per path; a remove drops it, a later re-add revives it).
+    * Every protocol and metaData action passes the reader-capability
+    * guard: a table written under a newer reader protocol (an unknown
+    * reader feature, an unknown column-mapping mode) would be silently
+    * MISREAD by plain adds-minus-removes replay, so the first such action
+    * records a refusal that file-level consumers raise typed.
+    */
+  private final class LogReplay(path: String, foldAdds: Boolean) {
+    import com.fasterxml.jackson.databind.JsonNode
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    var protocol: Option[JsonNode] = None
+    var metaData: Option[JsonNode] = None
+    val txns = scala.collection.mutable.Map.empty[String, Long]
+    val domains = scala.collection.mutable.Map.empty[String, JsonNode]
+    val adds = scala.collection.mutable.LinkedHashMap.empty[String, DeltaStats.AddEntry]
+    var refusal: Option[String] = None
+
+    private def refuse(what: String): Unit =
+      if (refusal.isEmpty) refusal = Some(s"$path requires an unsupported " +
+        s"reader capability ($what); reading it with plain add/remove " +
+        "replay would return wrong rows")
+
+    def action(kind: String, n: JsonNode): Unit = kind match {
+      case "add" if foldAdds => parseAddEntry(n).foreach(a => adds(a.rel) = a)
+      case "remove" if foldAdds =>
+        Option(n.get("path")).foreach(p => adds -= p.asText)
+      case "protocol" =>
+        val (rv, _, rf, _) = protocolOf(n)
+        if (rv > 3 || (rv == 3 && rf.exists(f => !SupportedReaderFeatures(f))))
+          refuse(s"protocol minReaderVersion $rv, readerFeatures " +
+            rf.mkString("[", ", ", "]"))
+        protocol = Some(n)
+      case "metaData" =>
+        val cm = Option(n.get("configuration"))
+          .flatMap(c => Option(c.get("delta.columnMapping.mode")))
+          .map(_.asText("none")).getOrElse("none")
+        if (cm != "none" && cm != "name" && cm != "id")
+          refuse(s"column mapping mode '$cm'")
+        metaData = Some(n)
+      case "txn" =>
+        (Option(n.get("appId")), Option(n.get("version"))) match {
+          case (Some(app), Some(v)) if !app.isNull && !v.isNull =>
+            txns(app.asText) = math.max(txns.getOrElse(app.asText, v.asLong), v.asLong)
+          case _ => ()
         }
-      case None =>
-        val adds0 = activeAddsAsOf(spark, path, versionAsOf)
-        val pruned = predicate.map(p => pruneAddsFor(spark, path, p, adds0))
-          .getOrElse(adds0)
-        keep.map(f => pruned.filter(f)).getOrElse(pruned)
+      case "domainMetadata" =>
+        Option(n.get("domain")).map(_.asText).foreach { d =>
+          if (Option(n.get("removed")).exists(_.asBoolean(false))) domains -= d
+          else domains(d) = n
+        }
+      case _ => ()
     }
 
-  /** An overwrite's remove set: every active file's (path, raw
-    * deletionVector json) plus the log version the capture reflects
-    * (nextVersion at capture — the caller re-verifies it before taking
-    * the commit slot). Above `snapshotDriverMaxBytes` of log state the
-    * snapshot folds DISTRIBUTEDLY and the driver collects ONLY these
-    * two strings per file — the same O(paths) floor as the remove
-    * actions the overwrite's commit JSON must spell out anyway — never
-    * the full stats/partitionValues metadata ([[activeAddsAsOf]]'s
-    * driver shape, GBs at a 100 TB table's ~10⁶ files).
+    /** One newline-delimited commit line: add before remove, like every
+      * single-action line this writer emits. */
+    def line(text: String): Unit = {
+      val node = try mapper.readTree(text) catch { case _: Exception => null }
+      if (node != null && node.isObject)
+        (Seq("add", "remove") ++ StateActionKinds).foreach(k =>
+          Option(node.get(k)).filter(_.isObject).foreach(action(k, _)))
+    }
+
+    /** Collect the `kinds` action rows of a checkpoint or commit frame
+      * (as JSON, in `rec` order when given) and replay them. */
+    def collect(df: DataFrame, kinds: Seq[String], rec: Option[String]): Unit = {
+      import org.apache.spark.sql.functions.to_json
+      val present = kinds.filter(df.columns.contains)
+      if (present.nonEmpty) {
+        val rows = df.where(present.map(k => col(k).isNotNull).reduce(_ || _))
+          .select(rec.map(col).getOrElse(lit(0L)) +:
+            present.map(k => to_json(col(k)).as(k)): _*)
+          .collect().toSeq.sortBy(_.getLong(0))
+        rows.foreach { r =>
+          present.indices.foreach { i =>
+            if (!r.isNullAt(i + 1)) {
+              val n = try mapper.readTree(r.getString(i + 1))
+                catch { case _: Exception => null }
+              if (n != null) action(present(i), n)
+            }
+          }
+        }
+      }
+    }
+  }
+
+  /** (minReader, minWriter, readerFeatures, writerFeatures) of a protocol
+    * action's value. */
+  private def protocolOf(p: com.fasterxml.jackson.databind.JsonNode)
+      : (Int, Int, Seq[String], Seq[String]) = {
+    def feats(k: String): Seq[String] = {
+      val b = scala.collection.mutable.ArrayBuffer.empty[String]
+      Option(p.get(k)).filter(_.isArray).foreach(_.forEach(f => b += f.asText))
+      b.toSeq
+    }
+    (Option(p.get("minReaderVersion")).map(_.asInt(1)).getOrElse(1),
+      Option(p.get("minWriterVersion")).map(_.asInt(1)).getOrElse(1),
+      feats("readerFeatures"), feats("writerFeatures"))
+  }
+
+  /** One table version's replayed state — the single route by which every
+    * read, write and maintenance operation learns the table's protocol,
+    * metaData, txn watermarks, domainMetadata and active files.
+    *
+    * Building it lists `_delta_log` once, reads `_last_checkpoint` once,
+    * opens the newest checkpoint at or below the version once, and
+    * replays the commits after it once. The driver-or-distributed choice
+    * is made here and nowhere else: when the checkpoint part files plus
+    * the replayed commit JSONs exceed `driverMaxBytes`, the active set
+    * stays a DataFrame fold ([[addsFrame]]) and only the state actions (a
+    * handful of rows regardless of table size) reach the driver;
+    * otherwise ONE collect brings the checkpoint's actions to the driver
+    * and the commits replay there with Jackson.
     */
-  private def overwriteRemoveSet(spark: SparkSession, path: String,
-      snapshotDriverMaxBytes: Long): (Long, Seq[(String, Long, Option[String])]) = {
+  private[sources] final class Snapshot private (
+      val spark: SparkSession, val path: String, val fs: FileSystem,
+      val version: Long, val checkpointVersion: Option[Long],
+      val logExists: Boolean, val driverMaxBytes: Long,
+      val checkpointFrame: Option[DataFrame],
+      replay: LogReplay, fold: Option[DataFrame]) {
+    import com.fasterxml.jackson.databind.JsonNode
+
     val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = nextVersion(fs, logDir(tbl)).getOrElse(0L)
-    val pairs: Seq[(String, Long, Option[String])] =
-      if (fs.exists(logDir(tbl)) &&
-          snapshotLogBytes(fs, logDir(tbl), None) > snapshotDriverMaxBytes)
-        activeAddsDfAsOf(spark, path, None).map { snap =>
-          snap.select(col("graft_path"),
-              org.apache.spark.sql.functions.get_json_object(
-                col("graft_add"), "$.size").cast("long"),
-              org.apache.spark.sql.functions.get_json_object(
-                col("graft_add"), "$.deletionVector"))
-            .collect().toSeq
-            .map(r => (r.getString(0),
-              if (r.isNullAt(1)) 0L else r.getLong(1),
-              Option(r.getString(2))))
-        }.getOrElse(Nil)
-      else activeAddsAsOf(spark, path, None).map(a =>
-        (a.rel, a.size, a.dv.map(dvDescriptorJson)))
-    (base, pairs)
+    def log: HPath = logDir(tbl)
+
+    /** (minReader, minWriter, readerFeatures, writerFeatures); the
+      * (1, 1) floor when the log declares no protocol. */
+    val protocol: (Int, Int, Seq[String], Seq[String]) =
+      replay.protocol.map(protocolOf).getOrElse((1, 1, Nil, Nil))
+    private def meta(k: String): Option[JsonNode] =
+      replay.metaData.flatMap(m => Option(m.get(k))).filterNot(_.isNull)
+    val tableId: Option[String] = meta("id").map(_.asText)
+    val schemaJson: Option[String] = meta("schemaString").filter(_.isTextual).map(_.asText)
+    val partitionColumns: Option[Seq[String]] = meta("partitionColumns")
+      .filter(_.isArray).map { a =>
+        val b = scala.collection.mutable.ArrayBuffer.empty[String]
+        a.forEach(c => b += c.asText)
+        b.toSeq
+      }
+    val configuration: Map[String, String] = meta("configuration")
+      .filter(_.isObject).map { c =>
+        val b = Map.newBuilder[String, String]
+        c.fields().forEachRemaining { e =>
+          b += e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)
+        }
+        b.result()
+      }.getOrElse(Map.empty)
+    val txns: Map[String, Long] = replay.txns.toMap
+
+    /** The declared schema — None when the log has no schemaString or it
+      * doesn't parse (foreign/v0 writers), exactly when a reader must fall
+      * back to file footers. */
+    lazy val schema: Option[StructType] = schemaJson.flatMap { js =>
+      try Some(org.apache.spark.sql.types.DataType.fromJson(js)
+        .asInstanceOf[StructType])
+      catch { case _: Exception => None }
+    }
+
+    def mappingMode: String =
+      configuration.getOrElse("delta.columnMapping.mode", "none")
+
+    /** Logical schema when the table uses ANY column mapping, tagged with
+      * the mode ("name" | "id"). A mapped table whose schemaString is
+      * missing/unparseable must refuse, not fall back to raw physical
+      * names. Resolved from THIS version's metaData — a version-preserving
+      * overwrite of a mapped table re-mints physical column names, so a
+      * time-travel read resolving against the LATEST mapping would read
+      * pre-overwrite files under post-overwrite physical names. */
+    def logicalIfMapped: Option[(String, StructType)] = {
+      val mode = mappingMode
+      if (mode != "name" && mode != "id") None
+      else Some(mode -> schema.getOrElse(throw graft.GraftError.InvalidOperation(
+        "load_delta", s"$tbl uses $mode-mode column mapping but its " +
+          "metaData.schemaString is missing or unparseable — cannot " +
+          "derive the physical-to-logical mapping")))
+    }
+
+    /** Configuration of a live domainMetadata action, parsed. */
+    private def domainConf(domain: String): Option[JsonNode] =
+      replay.domains.get(domain).flatMap(d => Option(d.get("configuration")))
+        .map(_.asText).flatMap(cs =>
+          try Option(replay.mapper.readTree(cs)) catch { case _: Exception => None })
+
+    /** Newest `rowIdHighWaterMark` of the delta.rowTracking domain; -1 when
+      * the table has never assigned a row id. */
+    def rowIdHighWaterMark: Long = domainConf(RowTrackingDomain)
+      .flatMap(c => Option(c.get("rowIdHighWaterMark"))).map(_.asLong)
+      .getOrElse(-1L)
+
+    /** Clustering column paths of the live `delta.clustering` domain
+      * (Nil when the table isn't clustered or the domain was removed). */
+    def clusteringPaths: Seq[Seq[String]] = domainConf("delta.clustering")
+      .flatMap(c => Option(c.get("clusteringColumns"))).filter(_.isArray)
+      .map { arr =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+        arr.forEach { pathNode =>
+          val parts = scala.collection.mutable.ArrayBuffer.empty[String]
+          if (pathNode.isArray) pathNode.forEach(p => parts += p.asText)
+          else parts += pathNode.asText
+          out += parts.toSeq
+        }
+        out.toSeq
+      }.getOrElse(Nil)
+
+    /** This snapshot when a commit at `v` would directly follow it, else
+      * a fresh latest snapshot — a commit that lost its slot re-reads the
+      * state (row-id high-water mark, txn watermarks, protocol) its
+      * winners may have moved. */
+    def forCommit(v: Long): Snapshot =
+      if (v == version + 1) this else Snapshot.load(spark, path, None, driverMaxBytes)
+
+    private def guard(): Unit = replay.refusal.foreach(msg =>
+      throw graft.GraftError.InvalidOperation("load_delta", msg))
+
+    /** Active entries surviving `predicate` stats pruning (all of them
+      * when None/unparseable — conservative) and the pure `keep` filter.
+      * On the distributed route both filters run IN EXECUTORS and the
+      * driver materializes only the survivors; `lean` further strips
+      * their stats and partition values, leaving the path-level fields a
+      * scan, a remove action or a row-id attach needs. Pruning remaps
+      * physical stats keys to logical names on mapped tables so skipping
+      * keeps working there.
+      */
+    def addsWhere(predicate: Option[String] = None,
+        keep: Option[DeltaStats.AddEntry => Boolean] = None,
+        lean: Boolean = false): Seq[DeltaStats.AddEntry] = {
+      guard()
+      val mayMatch = statsFilter(spark, predicate, schema,
+        schema.flatMap(_ => logicalIfMapped).map(m => physToLogMap(m._2)),
+        partitionColumns.getOrElse(Nil))
+      fold match {
+        case None =>
+          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+          replay.adds.values.toSeq.filter(a =>
+            mayMatch(a, mapper) && keep.forall(_(a)))
+        case Some(f) =>
+          val sess = spark
+          import sess.implicits._
+          f.select("graft_add").as[String].mapPartitions { it =>
+            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+            it.flatMap { js =>
+              val node = try mapper.readTree(js) catch { case _: Exception => null }
+              Option(node).flatMap(parseAddEntry)
+                .filter(a => mayMatch(a, mapper) && keep.forall(_(a)))
+                .map(a => if (lean) a.copy(partitionValues = Map.empty,
+                  stats = None) else a)
+            }
+          }.collect().toSeq
+      }
+    }
+
+    /** Active file count. */
+    def numFiles: Long = {
+      guard()
+      fold.map(_.count()).getOrElse(replay.adds.size.toLong)
+    }
+
+    /** Active relative paths as a one-column (`graft_active_path`) frame
+      * plus their count — the survivor set a checkpoint write semi-joins
+      * against. The distributed fold is pinned (consumed three times);
+      * the driver fold is a local relation of paths. */
+    def activePathFrame: (DataFrame, Long) = {
+      guard()
+      val sess = spark
+      import sess.implicits._
+      fold match {
+        case Some(f) =>
+          val pinned = f.select(col("graft_path").as("graft_active_path"))
+            .localCheckpoint(true)
+          (pinned, pinned.count())
+        case None =>
+          val rels = replay.adds.keys.toSeq
+          (rels.toDF("graft_active_path"), rels.size.toLong)
+      }
+    }
+
+    /** The active set as (`graft_path`, `graft_add` JSON) rows — None
+      * when the log has no state at this version. */
+    def addsFrame: Option[DataFrame] = {
+      guard()
+      val sess = spark
+      import sess.implicits._
+      fold.orElse(if (version < 0) None else Some(replay.adds.values.toSeq
+        .map(a => (a.rel, addJson(a, 0L))).toDF("graft_path", "graft_add")))
+    }
+  }
+
+  private[sources] object Snapshot {
+
+    /** The snapshot at `asOf` (None = latest); an explicit version must
+      * still have its commit file — time travel to a version folded into
+      * a cleaned-up checkpoint fails typed. */
+    def apply(spark: SparkSession, path: String, asOf: Option[Long] = None,
+        driverMaxBytes: Long = SnapshotDriverMaxBytes): Snapshot = {
+      asOf.foreach { v =>
+        val tbl = new HPath(path)
+        val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(new HPath(logDir(tbl), commitName(v))))
+          throw graft.GraftError.InvalidOperation("load_delta",
+            s"version $v does not exist in $path (versions: " +
+              s"${commitVersions(logListing(fs, logDir(tbl))).mkString(", ")})")
+      }
+      load(spark, path, asOf, driverMaxBytes)
+    }
+
+    /** The replay behind [[apply]], without the commit-file check: the
+      * state as of `asOf` from whatever checkpoint and commits remain. */
+    def load(spark: SparkSession, path: String, asOf: Option[Long],
+        driverMaxBytes: Long): Snapshot = {
+      import org.apache.spark.sql.functions.{input_file_name, regexp_extract, row_number, to_json}
+      val tbl = new HPath(path)
+      val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val log = logDir(tbl)
+      val listing = logListing(fs, log)
+      val allCommits = commitVersions(listing)
+      val lastCp = lastCheckpointVersion(fs, log)
+      val cpVersion = lastCp.filter(cp => asOf.forall(cp <= _))
+      val commits = allCommits
+        .filter(v => cpVersion.forall(v > _) && asOf.forall(v <= _))
+      val version = asOf.getOrElse((allCommits ++ lastCp).maxOption.getOrElse(-1L))
+      val distributed =
+        snapshotLogBytes(fs, log, listing, cpVersion, commits) > driverMaxBytes
+      val replay = new LogReplay(path, foldAdds = !distributed)
+      val cp = cpVersion.flatMap(v =>
+        readCheckpoint(spark, fs, log, v, listing).orElse {
+          replay.refusal = Some(s"$path: _last_checkpoint names version $v " +
+            "but no checkpoint parquet files exist")
+          None
+        })
+      val commitPaths = commits.map(v => new HPath(log, commitName(v)).toString)
+      val fold: Option[DataFrame] =
+        if (!distributed) {
+          cp.foreach(replay.collect(_, "add" +: StateActionKinds, None))
+          commitPaths.foreach(p =>
+            readString(fs, new HPath(p)).linesIterator.foreach(replay.line))
+          None
+        } else {
+          val logF =
+            if (commits.isEmpty) None
+            else Some(spark.read.json(commitPaths: _*)
+              .withColumn("graft_rec", regexp_extract(input_file_name(),
+                "(\\d{20})\\.json", 1).cast("long")))
+          cp.foreach(replay.collect(_, StateActionKinds, None))
+          logF.foreach(replay.collect(_, StateActionKinds, Some("graft_rec")))
+          def subset(df: DataFrame, c: String): Option[DataFrame] =
+            if (df.columns.contains(c)) Some(df.where(col(c).isNotNull)) else None
+          // fold rows: (path, recency, isAdd, add-json). Checkpoint rows
+          // are older than every replayed commit (rec = -1); within one
+          // commit a remove+re-add of the same path resolves to the add
+          // (isAdd desc), matching the line-ordered driver fold on our
+          // writer's layout (removes precede adds within a commit).
+          val cpAddRows = cp.flatMap(subset(_, "add")).map(_.select(
+            col("add.path").as("graft_path"), to_json(col("add")).as("graft_add"),
+            lit(-1L).as("graft_rec"), lit(1).as("graft_isadd")))
+          val commitAddRows = logF.flatMap(subset(_, "add")).map(_.select(
+            col("add.path").as("graft_path"), to_json(col("add")).as("graft_add"),
+            col("graft_rec"), lit(1).as("graft_isadd")))
+          val commitRemoveRows = logF.flatMap(subset(_, "remove")).map(_.select(
+            col("remove.path").as("graft_path"),
+            lit(null: String).as("graft_add"),
+            col("graft_rec"), lit(0).as("graft_isadd")))
+          val rows = (cpAddRows.toSeq ++ commitAddRows.toSeq ++
+            commitRemoveRows.toSeq).reduceOption(_.unionByName(_))
+          Some(rows.map { u =>
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("graft_path"))
+              .orderBy(col("graft_rec").desc, col("graft_isadd").desc)
+            u.withColumn("graft_rn", row_number().over(w))
+              .where(col("graft_rn") === 1 && col("graft_isadd") === 1)
+              .select(col("graft_path"), col("graft_add"))
+          }.getOrElse(spark.emptyDataFrame
+            .select(lit(null: String).as("graft_path"),
+              lit(null: String).as("graft_add"))))
+        }
+      new Snapshot(spark, path, fs, version, cp.flatMap(_ => cpVersion),
+        fs.exists(log), driverMaxBytes, cp, replay, fold)
+    }
+  }
+
+  /** Bytes of log state a snapshot fold consumes: the checkpoint part
+    * files plus the replayed commit JSONs (listing lengths only — no
+    * content reads). The routing signal of [[Snapshot.load]].
+    */
+  private def snapshotLogBytes(fs: FileSystem, log: HPath,
+      listing: Seq[FileStatus], cpVersion: Option[Long],
+      commits: Seq[Long]): Long = {
+    val cpBytes = cpVersion.toSeq.flatMap { v =>
+      val classic = checkpointPaths(listing, v).map(_.getLen)
+      if (classic.nonEmpty) classic
+      else v2ManifestPath(listing, v).toSeq.flatMap { m =>
+        // v2: manifest + the _sidecars listing (over-counts sidecars
+        // shared with older checkpoints — the conservative direction:
+        // big sidecar sets route to the DISTRIBUTED fold)
+        val sidecarsDir = new HPath(log, "_sidecars")
+        m.getLen +: (if (fs.exists(sidecarsDir))
+          fs.listStatus(sidecarsDir).toSeq.map(_.getLen) else Nil)
+      }
+    }.sum
+    val replayed = commits.map(commitName).toSet
+    cpBytes + listing.filter(s => replayed(s.getPath.getName)).map(_.getLen).sum
+  }
+
+  /** The per-entry stats-pruning decision for `predicate` against a
+    * snapshot's declared schema (keep everything when the schema or the
+    * predicate doesn't parse). Built from plain values only — the
+    * distributed prune ships it to executors, so it must never capture a
+    * session or a snapshot. */
+  private def statsFilter(spark: SparkSession, predicate: Option[String],
+      schema: Option[StructType], physToLog: Option[Map[String, String]],
+      partitionColumns: Seq[String])
+      : (DeltaStats.AddEntry, com.fasterxml.jackson.databind.ObjectMapper) => Boolean = {
+    val pcols = physToLog match {
+      case Some(m) => partitionColumns.map(c => m.getOrElse(c, c))
+      case None => partitionColumns
+    }
+    val conj = predicate.flatMap(p =>
+      schema.flatMap(_ => DeltaStats.parseConjuncts(spark, p)))
+    (schema, conj) match {
+      case (Some(s), Some(conjuncts)) => (a, mapper) =>
+        val e = physToLog match {
+          case Some(m) => remapAddToLogical(a, m, mapper)
+          case None => a
+        }
+        DeltaStats.entryMayMatch(conjuncts, s, pcols, e, mapper)
+      case _ => (_, _) => true
+    }
   }
 
   /** `delta.requireCheckpointProtectionBeforeVersion` (the
     * checkpointProtection feature's boundary) — 0 when unset/unparseable,
     * i.e. nothing is protected.
     */
-  private def checkpointProtectionVersion(spark: SparkSession,
-      fs: FileSystem, tbl: HPath): Long =
-    tableConfiguration(spark, fs, tbl)
-      .get("delta.requireCheckpointProtectionBeforeVersion")
+  private def checkpointProtectionVersion(snap: Snapshot): Long =
+    snap.configuration.get("delta.requireCheckpointProtectionBeforeVersion")
       .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .getOrElse(0L)
 
@@ -4360,8 +4063,7 @@ object DeltaLog {
     * (and stats-skipping would prune unsoundly), so predicate-bearing
     * operations refuse.
     */
-  private def collatedColumns(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Set[String] = {
+  private def collatedColumns(snap: Snapshot): Set[String] = {
     import org.apache.spark.sql.types._
     def collated(dt: DataType): Boolean = dt match {
       case s: StringType => s != StringType
@@ -4370,7 +4072,7 @@ object DeltaLog {
       case mt: MapType => collated(mt.keyType) || collated(mt.valueType)
       case _ => false
     }
-    parsedTableSchema(spark, fs, tbl).toSeq.flatMap(_.fields)
+    snap.schema.toSeq.flatMap(_.fields)
       .filter(f => collated(f.dataType) ||
         f.metadata.contains("__COLLATIONS")).map(_.name).toSet
   }
@@ -4382,16 +4084,16 @@ object DeltaLog {
     * returns wrong rows, delta-spark without collation support refuses
     * too).
     */
-  private def refuseOnCollatedColumns(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, op: String, predicateOrKeys: String): Unit = {
-    val collated = collatedColumns(spark, fs, tbl)
+  private def refuseOnCollatedColumns(snap: Snapshot, op: String,
+      predicateOrKeys: String): Unit = {
+    val collated = collatedColumns(snap)
     if (collated.isEmpty) return
     val hit = collated.find(c =>
       ("(?i)(^|[^A-Za-z0-9_`])" + java.util.regex.Pattern.quote(c) +
         "($|[^A-Za-z0-9_`])").r.findFirstIn(predicateOrKeys).isDefined ||
         predicateOrKeys.contains(s"`$c`"))
     hit.foreach(c => throw graft.GraftError.InvalidOperation(op,
-      s"$tbl: column '$c' carries a non-default collation " +
+      s"${snap.tbl}: column '$c' carries a non-default collation " +
         "(__COLLATIONS annotation) — evaluating a predicate or merge " +
         "key over it under this engine's binary collation would return " +
         "wrong rows; rewrite the operation to avoid the collated column"))
@@ -4400,149 +4102,12 @@ object DeltaLog {
   /** icebergCompatV1/V2 forbid deletion vectors in the table — refuse
     * the DV-creating path typed on such tables.
     */
-  private def requireNoIcebergCompatDv(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, op: String): Unit = {
-    val conf = tableConfiguration(spark, fs, tbl)
-    if (confEnabled(conf, "delta.enableIcebergCompatV1") ||
-        confEnabled(conf, "delta.enableIcebergCompatV2"))
+  private def requireNoIcebergCompatDv(snap: Snapshot, op: String): Unit =
+    if (confEnabled(snap.configuration, "delta.enableIcebergCompatV1") ||
+        confEnabled(snap.configuration, "delta.enableIcebergCompatV2"))
       throw graft.GraftError.InvalidOperation(op,
-        s"$tbl enables icebergCompat, which forbids deletion vectors — " +
+        s"${snap.tbl} enables icebergCompat, which forbids deletion vectors — " +
           "use the copy-on-write delete instead")
-  }
-
-  /** The table's `delta.columnMapping.mode` from the newest metaData —
-    * commits first, checkpoint fallback; "none" when unset.
-    */
-  private def columnMappingMode(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): String =
-    tableConfiguration(spark, fs, tbl, asOf)
-      .getOrElse("delta.columnMapping.mode", "none")
-
-  /** Cache identity of a table's log: path + newest commit version +
-    * that commit file's length and modification time + a CRC of its
-    * bytes. Keying on the version alone is WRONG when a table is
-    * recreated at the same path (overwrite / fixture rebuild): the new
-    * log can end at the same version number and a stale cache would
-    * serve the old table's configuration — silent wrong columns on a
-    * remapped table. (len, modTime) alone is still spoofable by an
-    * equal-length rebuild inside the filesystem's mtime granularity (1 s
-    * on some object stores), so the content CRC closes that window; the
-    * newest commit is a tiny file, one read per cache consultation vs
-    * the O(versions) walk the caches exist to avoid.
-    */
-  private def logIdentity(fs: FileSystem, tbl: HPath): (String, Long, Long, Long, Long) = {
-    val log = logDir(tbl)
-    val newest =
-      if (!fs.exists(log)) None
-      else fs.listStatus(log).toSeq
-        .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-        .sortBy(_.getPath.getName).lastOption
-    newest match {
-      case Some(st) =>
-        // CRC of the FIRST 64 KB only: combined with (version, len,
-        // modTime) that pins any realistic same-length rebuild, while a
-        // bootstrap commit with 10⁵ add actions (tens of MB) doesn't get
-        // fully re-read on every cache consultation
-        val crc = new java.util.zip.CRC32()
-        val in = fs.open(st.getPath)
-        try {
-          // fill to 64 KB or EOF — a single read() may return short
-          // (HDFS), and a partial-read CRC would make the key
-          // nondeterministic across consultations
-          val buf = new Array[Byte](65536)
-          var off = 0
-          var n = 0
-          while (off < buf.length && n >= 0) {
-            n = in.read(buf, off, buf.length - off)
-            if (n > 0) off += n
-          }
-          crc.update(buf, 0, off)
-        } finally in.close()
-        (tbl.toString,
-          st.getPath.getName.stripSuffix(".json").toLong, st.getLen,
-          st.getModificationTime, crc.getValue)
-      case None => (tbl.toString, -1L, -1L, -1L, -1L)
-    }
-  }
-
-  /** Memo for [[tableConfiguration]] keyed by [[logIdentity]]: a snapshot
-    * read consults the configuration 2-3 times (mapping-mode gate, read
-    * rename, write path) and each uncached call walks commits
-    * newest→oldest until it finds a metaData — typically all the way to
-    * version 0, so a long-history table paid O(versions) I/O per
-    * consultation. Any new or rewritten commit changes the key, so this
-    * is pure memoization (the function always resolves the NEWEST
-    * metaData).
-    */
-  private val confCache =
-    new java.util.concurrent.ConcurrentHashMap[((String, Long, Long, Long, Long), Long), Map[String, String]]()
-
-  /** Memo for [[tableSchemaJson]] under the same log identity (+ as-of
-    * version — older versions are immutable, so identity alone pins
-    * them): every declared-schema read consults the schema, and without
-    * the memo each consultation re-reads commit JSONs newest-first until
-    * a metaData line appears.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[((String, Long, Long, Long, Long), Long), Option[String]]()
-
-  /** Memo for [[tablePartitionColumns]] — same shape as [[schemaCache]]. */
-  private val partColsCache =
-    new java.util.concurrent.ConcurrentHashMap[((String, Long, Long, Long, Long), Long), Option[Seq[String]]]()
-
-  /** Table configuration map from the newest metaData (same visibility
-    * rule as [[tableSchemaJson]]; `asOf` bounds the search to commits ≤
-    * that version — configuration time-travels with the data).
-    */
-  private def tableConfiguration(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Map[String, String] = {
-    val cacheKey = (logIdentity(fs, tbl), asOf.getOrElse(-1L))
-    val hit = confCache.get(cacheKey)
-    if (hit != null) return hit
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    def parse(conf: com.fasterxml.jackson.databind.JsonNode): Map[String, String] = {
-      val b = Map.newBuilder[String, String]
-      conf.fields().forEachRemaining { e =>
-        b += e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)
-      }
-      b.result()
-    }
-    val log = logDir(tbl)
-    val fromCommits = existingVersions(fs, log)
-      .filter(v => asOf.forall(v <= _)).reverse.iterator.flatMap { v =>
-      readString(fs, new HPath(log, commitName(v))).linesIterator.flatMap { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        val md = if (node == null) null else node.get("metaData")
-        val cf = if (md == null) null else md.get("configuration")
-        if (cf != null && cf.isObject) Some(parse(cf)) else None
-      }.toSeq.lastOption
-    }.nextOption()
-    val result = fromCommits.orElse(lastCheckpointVersion(fs, log)
-        .filter(v => asOf.forall(v <= _))
-        .flatMap(v => readCheckpoint(spark, fs, log, v)).flatMap { cp =>
-      val hasConf = cp.schema.fields.find(_.name == "metaData").exists(
-        _.dataType match {
-          case st: org.apache.spark.sql.types.StructType =>
-            st.fieldNames.contains("configuration")
-          case _ => false
-        })
-      if (hasConf) {
-        cp.where(col("metaData").isNotNull)
-          .select(org.apache.spark.sql.functions.to_json(col("metaData.configuration")))
-          .collect().headOption.flatMap { r =>
-            if (r.isNullAt(0)) None
-            else {
-              val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-              if (node != null && node.isObject) Some(parse(node)) else None
-            }
-          }
-      } else None
-    }).getOrElse(Map.empty)
-    if (confCache.size > 256) confCache.clear() // bound, not LRU — refill is cheap
-    confCache.put(cacheKey, result)
-    result
-  }
 
   /** Change feed between two versions — the incremental-consumption read
     * a training pipeline runs to process ONLY what changed since its last
@@ -4635,13 +4200,18 @@ object DeltaLog {
         s"($fromVersion, $toVersion]: ${missing.size} changed " +
           s"file(s) vacuumed away (e.g. ${missing.head.getName}) — the " +
           "change window is past the table's vacuum retention")
+    // files resolve against the metaData of the version they belong to
+    // (one snapshot per version the window touches)
+    val snaps = scala.collection.mutable.Map.empty[Long, Snapshot]
+    def snapAt(v: Long): Snapshot = snaps.getOrElseUpdate(v,
+      Snapshot.load(spark, path, Some(v), SnapshotDriverMaxBytes))
     // readDataFiles: the change feed of a name-mode column-mapped table
     // must surface LOGICAL column names like the snapshot read does
     def rowsOf(v: Long, rels: Seq[String], withMeta: Boolean,
         keyDepth: Int = 1): DataFrame =
-      readDataFiles(spark, path,
+      readDataFiles(snapAt(v),
         rels.map(r => new HPath(tbl, r).toString),
-        withRowMeta = withMeta, versionAsOf = Some(v), keyDepth = keyDepth)
+        withRowMeta = withMeta, keyDepth = keyDepth)
     def dvEntry(rel: String, dv: Option[DeltaStats.DvDescriptor]) =
       DeltaStats.AddEntry(rel, Map.empty, None, 0L, dv)
     // `schemaV`: the version whose metaData the files resolve against.
@@ -4680,7 +4250,7 @@ object DeltaLog {
           .parquet(cdc.map(r => new HPath(tbl, r).toString): _*)
         // mapping resolved AS-OF the cdc files' own commit: a later
         // overwrite may have re-minted the physical names
-        val logicalized = logicalSchemaIfMapped(spark, fs, tbl, Some(v)) match {
+        val logicalized = snapAt(v).logicalIfMapped match {
           case Some((_, logical)) =>
             val m = physToLogMap(logical)
             raw.select(raw.columns.map(c =>
@@ -4797,78 +4367,32 @@ object DeltaLog {
     * `delta.columnMapping.physicalName` annotations, then renamed — a
     * pure metadata operation, zero extra I/O. Deletion vectors apply as
     * an executor-side bitmap anti-join; only id-mode WRITES refuse typed
-    * (see [[activeAddsAsOf]]).
+    * (see [[Snapshot]]).
     */
   def read(spark: SparkSession, path: String,
       versionAsOf: Option[Long] = None,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): DataFrame = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(logDir(tbl)) &&
-        snapshotLogBytes(fs, logDir(tbl), versionAsOf) > snapshotDriverMaxBytes) {
-      // large log: fold the snapshot distributedly; the driver keeps
-      // only the path list the parquet scan needs plus the DV-bearing
-      // entries (bounded by the DV'd-file count), never every file's
-      // stats/partition metadata
-      val snap = activeAddsDfAsOf(spark, path, versionAsOf).getOrElse(
-        throw new IllegalArgumentException(
-          s"loadDelta: empty or missing _delta_log in $path"))
-        .localCheckpoint(true) // consumed 2-3×; never refold the log
-      // version-checksum verification (delta-spark VersionChecksum):
-      // when the snapshot version carries a .crc, the fold must agree —
-      // one extra aggregate over the already-checkpointed fold, never
-      // per-file driver state
-      val effVDist = versionAsOf
-        .orElse(nextVersion(fs, logDir(tbl)).map(_ - 1)).getOrElse(-1L)
-      if (effVDist >= 0 &&
-          lastCheckpointVersion(fs, logDir(tbl))
-            .filter(cp => versionAsOf.forall(cp <= _)).isEmpty &&
-          versionChecksumOf(fs, logDir(tbl), effVDist).isDefined) {
-        val row = snap.agg(
-          org.apache.spark.sql.functions.count(lit(1)),
-          org.apache.spark.sql.functions.sum(
-            org.apache.spark.sql.functions.get_json_object(
-              col("graft_add"), "$.size").cast("long"))).head()
-        validateVersionChecksum(fs, logDir(tbl), effVDist,
-          row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1), path)
-      }
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val dvAdds: Seq[DeltaStats.AddEntry] = snap
-        .where(col("graft_add").contains("\"deletionVector\""))
-        .select("graft_add").collect().toSeq
-        .flatMap { r =>
-          val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-          Option(node).flatMap(parseAddEntry)
-        }.filter(_.dv.isDefined)
-      val rels = snap.select("graft_path").collect()
-        .map(r => r.getString(0)).toSeq
-      require(rels.nonEmpty, s"loadDelta: empty or missing _delta_log in $path")
-      val files = rels.map(r => new HPath(tbl, r).toString)
-      // the DV row filter keys on trailing path segments; the depth must
-      // be unique across the WHOLE scanned snapshot (a collision between
-      // a DV'd file and any other scanned file would anti-join away
-      // innocent rows) — computed here from the already-collected path
-      // list, the one per-file datum this read keeps on the driver
-      val keyDepth = if (dvAdds.nonEmpty) dvKeyDepth(path, rels) else 1
-      return applyDeletionVectors(spark, path, dvAdds,
-        readDataFiles(spark, path, files, withRowMeta = dvAdds.nonEmpty,
-          versionAsOf = versionAsOf, keyDepth = keyDepth),
-        keyDepth = keyDepth)
-    }
-    val adds = activeAddsAsOf(spark, path, versionAsOf)
+    val snap = Snapshot(spark, path, versionAsOf, snapshotDriverMaxBytes)
+    // path-level entries only: on a large log the driver keeps the scan's
+    // file list plus the DV descriptors, never every file's
+    // stats/partition metadata
+    val adds = snap.addsWhere(lean = true)
     require(adds.nonEmpty, s"loadDelta: empty or missing _delta_log in $path")
-    val effV = versionAsOf
-      .orElse(nextVersion(fs, logDir(tbl)).map(_ - 1)).getOrElse(-1L)
-    if (effV >= 0 && lastCheckpointVersion(fs, logDir(tbl))
-        .filter(cp => versionAsOf.forall(cp <= _)).isEmpty)
-      validateVersionChecksum(fs, logDir(tbl), effV,
+    // version-checksum verification (delta-spark VersionChecksum): when
+    // the snapshot version carries a .crc, a pure-commit-replay fold must
+    // agree with it
+    if (snap.checkpointVersion.isEmpty)
+      validateVersionChecksum(snap.fs, snap.log, snap.version,
         adds.length.toLong, adds.map(_.size).sum, path)
-    val files = adds.map(a => new HPath(new HPath(path), a.rel).toString)
     val withMeta = adds.exists(_.dv.isDefined)
+    // the DV row filter keys on trailing path segments; the depth must
+    // be unique across the WHOLE scanned snapshot (a collision between
+    // a DV'd file and any other scanned file would anti-join away
+    // innocent rows)
     val keyDepth = if (withMeta) dvKeyDepth(path, adds.map(_.rel)) else 1
     applyDeletionVectors(spark, path, adds,
-      readDataFiles(spark, path, files, withRowMeta = withMeta,
-        versionAsOf = versionAsOf, keyDepth = keyDepth),
+      readDataFiles(snap, adds.map(a => new HPath(snap.tbl, a.rel).toString),
+        withRowMeta = withMeta, keyDepth = keyDepth),
       keyDepth = keyDepth)
   }
 
@@ -4882,53 +4406,19 @@ object DeltaLog {
     */
   def readWithRowIds(spark: SparkSession, path: String,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): DataFrame = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val conf = tableConfiguration(spark, fs, tbl)
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    val conf = snap.configuration
     if (!rowTrackingEnabled(conf))
       throw graft.GraftError.InvalidOperation("load_delta",
         s"$path does not enable row tracking — _row_id has no meaning " +
           "on this table")
-    // large log: fold the snapshot distributedly and collect per file
-    // only (path, baseRowId, defaultRowCommitVersion) — 3 small fields,
-    // the same O(paths) floor as the scan's file list — plus the
-    // DV-bearing entries; never every file's stats/partition metadata
-    // (the [[read]] large-branch contract, row-id flavored)
-    val large = fs.exists(logDir(tbl)) &&
-      snapshotLogBytes(fs, logDir(tbl), None) > snapshotDriverMaxBytes
-    val (adds, ridTriples): (Seq[DeltaStats.AddEntry],
-        Option[Seq[(String, Long, Long)]]) =
-      if (!large) (activeAddsAsOf(spark, path), None)
-      else {
-        val snap = activeAddsDfAsOf(spark, path, None).getOrElse(
-          throw new IllegalArgumentException(
-            s"loadDelta: empty or missing _delta_log in $path"))
-          .localCheckpoint(true) // consumed 2× (rid triples + DV subset)
-        import org.apache.spark.sql.functions.get_json_object
-        val trips = snap.select(col("graft_path"),
-            get_json_object(col("graft_add"), "$.baseRowId").cast("long"),
-            get_json_object(col("graft_add"), "$.defaultRowCommitVersion")
-              .cast("long"))
-          .collect().toSeq
-          .map(r => (r.getString(0),
-            if (r.isNullAt(1)) -1L else r.getLong(1),
-            if (r.isNullAt(2)) -1L else r.getLong(2)))
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val dvAdds = snap.where(col("graft_add").contains("\"deletionVector\""))
-          .select("graft_add").collect().toSeq
-          .flatMap { r =>
-            val node = try mapper.readTree(r.getString(0)) catch { case _: Exception => null }
-            Option(node).flatMap(parseAddEntry)
-          }.filter(_.dv.isDefined)
-        // `adds` carries only the DV subset downstream (applyDeletionVectors
-        // consumes just the DV'd entries); the scan file list and the
-        // row-id attach come from the triples
-        (dvAdds, Some(trips))
-      }
-    val rels = ridTriples.map(_.map(_._1)).getOrElse(adds.map(_.rel))
+    // per file only (path, baseRowId, defaultRowCommitVersion, DV) — the
+    // same O(paths) floor as the scan's file list
+    val adds = snap.addsWhere(lean = true)
+    val rels = adds.map(_.rel)
     require(rels.nonEmpty, s"loadDelta: empty or missing _delta_log in $path")
     val keyDepth = dvKeyDepth(path, rels)
-    val files = rels.map(r => new HPath(tbl, r).toString)
+    val files = rels.map(r => new HPath(snap.tbl, r).toString)
     val names = (conf.get(MatRowIdKey), conf.get(MatRowVerKey)) match {
       case (Some(i), Some(v)) => Some((i, v))
       case _ => None // foreign enablement without materialization:
@@ -4938,7 +4428,7 @@ object DeltaLog {
       StructField(i, org.apache.spark.sql.types.LongType),
       StructField(v, org.apache.spark.sql.types.LongType)) }
     val filtered = applyDeletionVectors(spark, path, adds,
-      readDataFiles(spark, path, files, withRowMeta = true,
+      readDataFiles(snap, files, withRowMeta = true,
         keyDepth = keyDepth, extraCols = extraCols),
       keepMeta = true, keyDepth = keyDepth)
     val (idCol, verCol, scanned) = names match {
@@ -4947,14 +4437,7 @@ object DeltaLog {
         filtered.withColumn("graft_mat_rid", lit(null).cast("long"))
           .withColumn("graft_mat_ver", lit(null).cast("long")))
     }
-    (ridTriples match {
-      case Some(trips) => withMaterializedRowIdTriples(spark,
-        trips.map { case (rel, rid, ver) =>
-          (relKey(path, rel, keyDepth), rid, ver) },
-        scanned, idCol, verCol)
-      case None => withMaterializedRowIds(spark, path, adds, scanned,
-        idCol, verCol, keyDepth)
-    })
+    withMaterializedRowIds(spark, path, adds, scanned, idCol, verCol, keyDepth)
       .withColumnRenamed(idCol, "_row_id")
       .withColumnRenamed(verCol, "_row_commit_version")
       .drop(DvFileCol, DvRowCol)
@@ -4965,12 +4448,12 @@ object DeltaLog {
     * physical row index (`_metadata` columns) — what the deletion-vector
     * anti-join keys on.
     */
-  private def readDataFiles(spark: SparkSession, path: String,
-      files: Seq[String], withRowMeta: Boolean = false,
-      versionAsOf: Option[Long] = None, keyDepth: Int = 1,
+  private def readDataFiles(snap: Snapshot,
+      files: Seq[String], withRowMeta: Boolean = false, keyDepth: Int = 1,
       extraCols: Seq[StructField] = Nil): DataFrame = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val spark = snap.spark
+    val path = snap.path
+    val tbl = snap.tbl
     def meta: Seq[org.apache.spark.sql.Column] =
       if (!withRowMeta) Nil
       else Seq(dvKeyExpr(keyDepth).as(DvFileCol),
@@ -4982,7 +4465,7 @@ object DeltaLog {
     // configuration, not the logical schema), so on mapped tables they
     // append to the physical read schema and pass through the rename
     // untouched.
-    logicalSchemaIfMapped(spark, fs, tbl, versionAsOf) match {
+    snap.logicalIfMapped match {
       case Some(("name", logical)) =>
         val physical = physicalType(logical).asInstanceOf[StructType]
         val df = spark.read
@@ -5006,8 +4489,7 @@ object DeltaLog {
         // in directory names, not files, so they resolve by NAME against
         // the physical-named `col=val` segments — mapped back to logical
         // through the schema's physicalName annotations.
-        val pcols = tablePartitionColumns(spark, fs, tbl, versionAsOf)
-          .getOrElse(Nil)
+        val pcols = snap.partitionColumns.getOrElse(Nil)
         // metaData.partitionColumns may spell a partition column either
         // logically (delta-spark) or physically (other writers) — match
         // both against the annotated schema
@@ -5075,7 +4557,7 @@ object DeltaLog {
         // merging survives only as the fallback for logs with no
         // parseable schemaString (foreign/v0 writers).
         val reader = spark.read.option("basePath", path)
-        val df = parsedTableSchema(spark, fs, tbl, versionAsOf) match {
+        val df = snap.schema match {
           case Some(declared) =>
             reader.schema(StructType(
               stripMeta(declared).asInstanceOf[StructType].fields ++
@@ -5464,16 +4946,17 @@ object DeltaLog {
       maxTouchedFiles: Int = DvDeleteMaxTouchedFiles): Long = {
     val tbl = new HPath(path)
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCollatedColumns(spark, fs, tbl, "delete_delta_dv", predicate)
-    requireNoIcebergCompatDv(spark, fs, tbl, "delete_delta_dv")
-    if (tableConfiguration(spark, fs, tbl)
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    refuseOnCollatedColumns(snap, "delete_delta_dv", predicate)
+    requireNoIcebergCompatDv(snap, "delete_delta_dv")
+    if (snap.configuration
         .getOrElse("delta.enableDeletionVectors", "false") != "true")
       throw graft.GraftError.InvalidOperation("delete_delta_dv",
         s"$path does not declare delta.enableDeletionVectors=true; DV " +
           "deletes are only written to tables already carrying the " +
           "feature (no silent protocol upgrade) — use the copy-on-write " +
           "deleteWhere")
-    requireNotAppendOnly(spark, fs, tbl, "delete_delta_dv")
+    requireNotAppendOnly(snap, "delete_delta_dv")
     // emitsCdc here means "the CDF contract is satisfied WITHOUT cdc
     // files": a DV delete's remove+re-add descriptor swap is
     // self-describing — CDF readers (readChanges' row-level bitmap
@@ -5482,7 +4965,7 @@ object DeltaLog {
     // rowIdsHandled: a DV delete never rewrites the file — the re-add
     // echoes the original baseRowId/defaultRowCommitVersion, so every
     // surviving row keeps its positional id
-    requireWriterCapability(spark, fs, tbl, "delete_delta_dv",
+    requireWriterCapability(snap, "delete_delta_dv",
       adds = false, removes = true, rewrites = false, emitsCdc = true,
       rowIdsHandled = true)
     // DISCOVERY scans only the stats-surviving files for the predicate
@@ -5490,8 +4973,7 @@ object DeltaLog {
     // of one key in a 100 TB table reads O(candidate files)); fold and
     // pruning run distributedly above the log-size threshold, so the
     // driver materializes only the CANDIDATE entries
-    val kept = activeAddsWhere(spark, path, Some(predicate),
-      snapshotDriverMaxBytes = snapshotDriverMaxBytes)
+    val kept = snap.addsWhere(Some(predicate))
     if (kept.isEmpty) return 0L
     // key depth over the candidates: matched scan rows resolve back to
     // AddEntries below, and both sides draw from kept files only — on a
@@ -5504,7 +4986,7 @@ object DeltaLog {
     // matching LIVE rows (existing DVs applied) with their physical
     // positions — rows a previous DV already deleted must not re-count
     val live = applyDeletionVectors(spark, path, kept,
-      readDataFiles(spark, path, files, withRowMeta = true,
+      readDataFiles(snap, files, withRowMeta = true,
         keyDepth = keyDepth), keepMeta = true, keyDepth = keyDepth)
     val newDf = live.where(expr(predicate))
       .select(col(DvFileCol).as("f"), col(DvRowCol).as("ri"),
@@ -5573,7 +5055,8 @@ object DeltaLog {
       z85Encode(bb.array())
     }
     val dvFile = new HPath(tbl, s"deletion_vector_$uuid.bin")
-    val descriptors = scala.collection.mutable.Map.empty[String, String]
+    val descriptors =
+      scala.collection.mutable.Map.empty[String, DeltaStats.DvDescriptor]
     val out = fs.create(dvFile, true)
     try {
       out.write(1)
@@ -5585,9 +5068,7 @@ object DeltaLog {
         out.write(data)
         out.writeInt(crc.getValue.toInt)
         descriptors(add.rel) =
-          s"""{"storageType":"u","pathOrInlineDv":"$uuidZ85",""" +
-            s""""offset":$pos,"sizeInBytes":${data.length},""" +
-            s""""cardinality":$card}"""
+          DeltaStats.DvDescriptor("u", uuidZ85, Some(pos), data.length, card)
         pos += 4L + data.length + 4L
       }
     } finally out.close()
@@ -5600,29 +5081,15 @@ object DeltaLog {
     val txnId = java.util.UUID.randomUUID().toString
     val now = System.currentTimeMillis()
     val actions = ListBuffer.empty[String]
-    actions += commitInfoJson("DELETE", txnId, fs, tbl,
-      tableConfiguration(spark, fs, tbl))
+    actions += commitInfoJson("DELETE", txnId, fs, tbl, snap.configuration)
     mergedSets.foreach { case (add, _, _) =>
-      val pvJson = add.partitionValues.map { case (k, v) =>
-        s""""${esc(k)}":${if (v == null) "null" else "\"" + esc(v) + "\""}"""
-      }.mkString("{", ",", "}")
-      val stats = add.stats.map(js => s""","stats":"${esc(js)}"""").getOrElse("")
       // protocol shape: the remove echoes the superseded add's DV
       // descriptor (when it carried one) so an external vacuum can
       // associate the old deletion_vector_*.bin with the removed entry
       val removedDv = add.dv.map(d =>
         s""","deletionVector":${dvDescriptorJson(d)}""").getOrElse("")
       actions += s"""{"remove":{"path":"${esc(add.rel)}","deletionTimestamp":$now,"dataChange":true,"size":${add.size}$removedDv}}"""
-      // row tracking: the re-add is the SAME physical file — echo its
-      // baseRowId/defaultRowCommitVersion so positional ids survive
-      val rowField = (add.baseRowId, add.defaultRowCommitVersion) match {
-        case (Some(b), Some(v)) =>
-          s""","baseRowId":$b,"defaultRowCommitVersion":$v"""
-        case _ => ""
-      }
-      actions += s"""{"add":{"path":"${esc(add.rel)}","partitionValues":$pvJson,""" +
-        s""""size":${add.size},"modificationTime":$now,"dataChange":true""" +
-        s"""$stats$rowField,"deletionVector":${descriptors(add.rel)}}}"""
+      actions += s"""{"add":${addJson(add.copy(dv = Some(descriptors(add.rel))), now)}}"""
     }
     // lost slots rebase when the winners are logically disjoint (same
     // ConflictChecker rules as commitRewrite): the descriptor swap's
@@ -5636,13 +5103,12 @@ object DeltaLog {
       // re-stamp the commitInfo per attempt: a rebase follows a winner
       // whose in-commit timestamp (ICT tables) this commit must exceed —
       // replaying the pre-built line would break ICT monotonicity
-      actions(0) = commitInfoJson("DELETE", txnId, fs, tbl,
-        tableConfiguration(spark, fs, tbl))
+      actions(0) = commitInfoJson("DELETE", txnId, fs, tbl, snap.configuration)
       if (acquireCommitSlot(fs, log, v, txnId,
           actions.mkString("\n") + "\n")) committed = true
       else {
         try existingVersions(fs, log).filter(_ >= v).foreach(w =>
-          requireNoLogicalConflict(spark, fs, tbl, path, "delete_delta_dv",
+          requireNoLogicalConflict(snap, "delete_delta_dv",
             w, mergedSets.map(_._1.rel).toSet, dataChange = true,
             readPredicate = Some(predicate)))
         catch { case e: Throwable => fs.delete(dvFile, false); throw e }
@@ -5675,35 +5141,29 @@ object DeltaLog {
     */
   def purgeDeletionVectors(spark: SparkSession, path: String,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Int = {
-    val (rowTrack, matCols, rtExtraCols) = locally {
-      val tbl = new HPath(path)
-      val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // row tracking: the purge rewrite drops DV'd rows, shifting the
-      // survivors' positions — ids are materialized like the other
-      // copy-on-write restages
-      val info = rowTrackingRewriteInfo(spark, fs, tbl,
-        "purge_deletion_vectors")
-      requireWriterCapability(spark, fs, tbl, "purge_deletion_vectors",
-        adds = false, removes = false, rewrites = true,
-        rowIdsHandled = info._1)
-      info
-    }
-    // fold + DV filter run distributedly above the log-size threshold:
-    // the driver materializes only the DV-BEARING entries — the files a
-    // purge rewrites — never the plain bulk of the snapshot
-    val victims = activeAddsWhere(spark, path,
-      keep = Some((a: DeltaStats.AddEntry) =>
-        a.dv.exists(_.cardinality > 0)),
-      snapshotDriverMaxBytes = snapshotDriverMaxBytes)
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    // row tracking: the purge rewrite drops DV'd rows, shifting the
+    // survivors' positions — ids are materialized like the other
+    // copy-on-write restages
+    val (rowTrack, matCols, rtExtraCols) =
+      rowTrackingRewriteInfo(snap, "purge_deletion_vectors")
+    requireWriterCapability(snap, "purge_deletion_vectors",
+      adds = false, removes = false, rewrites = true,
+      rowIdsHandled = rowTrack)
+    // on a large log the DV filter runs in executors: the driver
+    // materializes only the DV-BEARING entries — the files a purge
+    // rewrites — never the plain bulk of the snapshot
+    val victims = snap.addsWhere(keep = Some((a: DeltaStats.AddEntry) =>
+      a.dv.exists(_.cardinality > 0)))
     if (victims.isEmpty) return 0
-    val tbl = new HPath(path)
+    val tbl = snap.tbl
     val files = victims.map(a => new HPath(tbl, a.rel).toString)
     // live rows of JUST the DV'd files: scan with row metadata, apply
     // their descriptors, drop the bookkeeping columns. Key depth over
     // the victims — the only files this scan and anti-join ever see
     val keyDepth = dvKeyDepth(path, victims.map(_.rel))
     val live0 = applyDeletionVectors(spark, path, victims,
-      readDataFiles(spark, path, files, withRowMeta = true,
+      readDataFiles(snap, files, withRowMeta = true,
         keyDepth = keyDepth, extraCols = rtExtraCols),
       keepMeta = rowTrack, keyDepth = keyDepth)
     val live = matCols.map { case (mid, mver) =>
@@ -5714,7 +5174,7 @@ object DeltaLog {
     // keep the victims' file granularity: without the hint the restage
     // inherits the anti-join's shuffle partitioning (spark.sql.shuffle
     // .partitions files regardless of victim count)
-    commitRewrite(spark, path, "PURGE", victims.map(_.rel).sorted, live,
+    commitRewrite(snap, "PURGE", victims.map(_.rel).sorted, live,
       removeDvJson = dvJson, numFiles = Some(victims.size),
       removeSize = victims.map(a => a.rel -> a.size).toMap)
     victims.size
@@ -5942,22 +5402,12 @@ object DeltaLog {
             .putLong(ParquetFieldIdKey, lf.metadata.getLong(MappingIdKey))
             .build())
     }: _*)
-    // unlike the read-side conf (left on by documented necessity — see
-    // readDataFiles), the write has no concurrent-plan race: restore the
-    // prior value so unrelated parquet writes whose schemas happen to
-    // carry parquet.field.id metadata keep their session's behavior
-    val prevFieldIdWrite =
-      spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    try {
+    withFieldIdWriteIf(spark, enable = true) {
       val w = physDf.write.mode("overwrite")
       // directories carry PHYSICAL names (the delta colmap layout)
       (if (partitionBy.nonEmpty)
          w.partitionBy(partitionBy.map(physByLogical): _*)
        else w).parquet(path)
-    } finally prevFieldIdWrite match {
-      case Some(v) => spark.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-      case None => spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
     }
     val rels = dataFiles(fs, tbl).keys.toSeq.sorted
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -5988,34 +5438,6 @@ object DeltaLog {
     try out.write((actions.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
   }
-
-  /** Logical schema when the table uses ANY column mapping, tagged with
-    * the mode ("name" | "id"). A mapped table whose schemaString is
-    * missing/unparseable must refuse, not fall back to raw physical
-    * names.
-    */
-  /** `asOf` resolves the mapping FROM THE METADATA OF THAT VERSION — a
-    * version-preserving overwrite of a mapped table re-mints physical
-    * column names, so a time-travel read resolving against the LATEST
-    * mapping would read pre-overwrite files under post-overwrite
-    * physical names and silently null every data column.
-    */
-  private def logicalSchemaIfMapped(spark: SparkSession, fs: FileSystem,
-      tbl: HPath, asOf: Option[Long] = None): Option[(String, StructType)] = {
-    val mode = columnMappingMode(spark, fs, tbl, asOf)
-    if (mode != "name" && mode != "id") None
-    else {
-      val schema = parsedTableSchema(spark, fs, tbl, asOf)
-      Some(mode -> schema.getOrElse(throw graft.GraftError.InvalidOperation(
-        "load_delta", s"$tbl uses $mode-mode column mapping but its " +
-          "metaData.schemaString is missing or unparseable — cannot " +
-          "derive the physical-to-logical mapping")))
-    }
-  }
-
-  private def logicalSchemaIfNameMapped(spark: SparkSession, fs: FileSystem,
-      tbl: HPath): Option[StructType] =
-    logicalSchemaIfMapped(spark, fs, tbl).collect { case ("name", s) => s }
 
   private val PhysicalNameKey = "delta.columnMapping.physicalName"
   private val MappingIdKey = "delta.columnMapping.id"
@@ -6121,17 +5543,8 @@ object DeltaLog {
   private def withFieldIdWriteIf[T](spark: SparkSession, enable: Boolean)
       (body: => T): T =
     if (!enable) body
-    else {
-      val prev =
-        spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      try body finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-      }
-    }
+    else Loaders.withConf(spark,
+      "spark.sql.parquet.fieldId.write.enabled" -> "true")(body)
 
   /** Logical-named read schema carrying parquet field ids: with
     * `spark.sql.parquet.fieldId.read.enabled` Spark resolves each column
@@ -6256,141 +5669,41 @@ object DeltaLog {
   def readWhere(spark: SparkSession, path: String, predicate0: String,
       versionAsOf: Option[Long] = None,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): DataFrame = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCollatedColumns(spark, fs, tbl, "load_delta", predicate0)
+    val snap = Snapshot(spark, path, versionAsOf, snapshotDriverMaxBytes)
+    refuseOnCollatedColumns(snap, "load_delta", predicate0)
     // equality predicates on a generated partition column's SOURCE prune
     // through the generation expression (implied conjuncts; sound for
     // deterministic expressions) — both the file-skipping kernel below
     // and the scan's own partition-dir pushdown see the augmented form
-    val predicate = augmentThroughGenerated(spark,
-      parsedTableSchema(spark, fs, tbl, versionAsOf),
-      tablePartitionColumns(spark, fs, tbl).getOrElse(Nil), predicate0)
-    // large log: snapshot fold AND stats pruning both run DISTRIBUTEDLY —
-    // DeltaStats.entryMayMatch is session-free, so the parsed conjuncts
-    // ship to executors and the driver sees only the SURVIVING file paths
-    // (plus their DV entries), never every add's stats JSON. On mapped
-    // tables the per-entry physical→logical stats-key remap ships too
-    // (remapAddToLogical is pure given the name map), so skipping keeps
-    // pruning there as well.
-    if (fs.exists(logDir(tbl)) &&
-        snapshotLogBytes(fs, logDir(tbl), versionAsOf) > snapshotDriverMaxBytes) {
-      val snap = activeAddsDfAsOf(spark, path, versionAsOf).getOrElse(
-        throw new IllegalArgumentException(
-          s"loadDelta: empty or missing _delta_log in $path"))
-      val schemaOpt = parsedTableSchema(spark, fs, tbl, versionAsOf)
-      val physToLog: Option[Map[String, String]] =
-        logicalSchemaIfMapped(spark, fs, tbl).map(m => physToLogMap(m._2))
-      val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-      val pcols = physToLog match {
-        case Some(m) => pcols0.map(c => m.getOrElse(c, c))
-        case None => pcols0
-      }
-      val conjOpt = schemaOpt.flatMap(_ =>
-        DeltaStats.parseConjuncts(spark, predicate))
-      val sess = spark
-      import sess.implicits._
-      val entries = snap.select("graft_add").as[String]
-      val keptEntries = (schemaOpt, conjOpt) match {
-        case (Some(schema), Some(conjuncts)) =>
-          entries.mapPartitions { it =>
-            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-            it.filter { addJson =>
-              val node = try mapper.readTree(addJson) catch { case _: Exception => null }
-              // unparseable add ⇒ keep (conservative, like the driver path)
-              Option(node).flatMap(parseAddEntry).forall { e0 =>
-                val e = physToLog match {
-                  case Some(m) => remapAddToLogical(e0, m, mapper)
-                  case None => e0
-                }
-                DeltaStats.entryMayMatch(conjuncts, schema, pcols, e, mapper)
-              }
-            }
-          }
-        case _ => entries
-      }
-      val keptRows = keptEntries.localCheckpoint(true) // consumed twice
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val dvAdds = keptRows
-        .filter(_.contains("\"deletionVector\"")).collect().toSeq
-        .flatMap { s =>
-          val node = try mapper.readTree(s) catch { case _: Exception => null }
-          Option(node).flatMap(parseAddEntry)
-        }.filter(_.dv.isDefined)
-      // survivors come back as bare path strings — stats stay in executors
-      val keptRels = keptRows.mapPartitions { it =>
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        it.flatMap { s =>
-          val node = try m.readTree(s) catch { case _: Exception => null }
-          Option(node).flatMap(n => Option(n.get("path")).map(_.asText))
-        }
-      }.collect().toSeq
-      // DV keys need only be unique across the SCANNED (kept) files —
-      // the anti-join never sees a pruned file's rows
-      val keyDepth = if (dvAdds.nonEmpty) dvKeyDepth(path, keptRels) else 1
-      if (keptRels.isEmpty) {
-        val schema = schemaOpt.map(s => stripMeta(s).asInstanceOf[StructType])
-          .getOrElse(read(spark, path, versionAsOf).schema)
-        return spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-          .where(expr(predicate))
-      }
-      return applyDeletionVectors(spark, path, dvAdds,
-        readDataFiles(spark, path,
-          keptRels.map(r => new HPath(tbl, r).toString),
-          withRowMeta = dvAdds.nonEmpty, versionAsOf = versionAsOf,
-          keyDepth = keyDepth),
-        keyDepth = keyDepth)
-        .where(expr(predicate))
-    }
-    val adds0 = activeAddsAsOf(spark, path, versionAsOf)
-    require(adds0.nonEmpty, s"loadDelta: empty or missing _delta_log in $path")
-    val schemaOpt = parsedTableSchema(spark, fs, tbl, versionAsOf)
-    // name-mode column mapping: add-action stats and partitionValues are
-    // keyed by PHYSICAL names while the predicate (and table schema) use
-    // logical ones — remap the metadata keys so skipping keeps working on
-    // mapped tables instead of degrading to keep-everything
-    val nameMapped = logicalSchemaIfMapped(spark, fs, tbl).map(_._2)
-    val adds = nameMapped match {
-      case Some(logical) => remapAddsToLogical(adds0, logical)
-      case None => adds0
-    }
-    val pcols0 = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-    // metaData.partitionColumns carries physical names on mapped tables
-    val pcols = nameMapped match {
-      case Some(logical) =>
-        val physToLog = logical.fields.map(f =>
-          (if (f.metadata.contains(PhysicalNameKey))
-            f.metadata.getString(PhysicalNameKey) else f.name) -> f.name).toMap
-        pcols0.map(c => physToLog.getOrElse(c, c))
-      case None => pcols0
-    }
-    val kept = schemaOpt match {
-      case Some(schema) => DeltaStats.prune(spark, predicate, schema, pcols, adds)
-      case None => adds
-    }
+    val predicate = augmentThroughGenerated(spark, snap.schema,
+      snap.partitionColumns.getOrElse(Nil), predicate0)
+    // stats pruning runs where the snapshot fold runs: on a large log
+    // DeltaStats.entryMayMatch ships to executors with the parsed
+    // conjuncts, and the driver sees only the SURVIVING path-level
+    // entries, never every add's stats JSON
+    val kept = snap.addsWhere(Some(predicate), lean = true)
     if (kept.isEmpty) {
       // provably-empty result: an empty relation with the table schema —
       // no file is opened at all
-      val schema = schemaOpt.map(s => stripMeta(s).asInstanceOf[StructType])
+      val schema = snap.schema.map(s => stripMeta(s).asInstanceOf[StructType])
         .getOrElse(read(spark, path, versionAsOf).schema)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        .where(expr(predicate))
-    } else {
-      // DV filtering composes with file skipping: stats were recorded
-      // before the deletes, so min/max/nullCount pruning stays SOUND
-      // (deletions only shrink a file's true row set — a pruned file
-      // still provably holds no matching row; a kept file's deleted rows
-      // are removed by the anti-join before the predicate applies)
-      val hasDv = kept.exists(_.dv.isDefined)
-      val keyDepth = if (hasDv) dvKeyDepth(path, kept.map(_.rel)) else 1
-      applyDeletionVectors(spark, path, kept,
-        readDataFiles(spark, path,
-          kept.map(a => new HPath(tbl, a.rel).toString), withRowMeta = hasDv,
-          versionAsOf = versionAsOf, keyDepth = keyDepth),
-        keyDepth = keyDepth)
+      return spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
         .where(expr(predicate))
     }
+    // DV filtering composes with file skipping: stats were recorded
+    // before the deletes, so min/max/nullCount pruning stays SOUND
+    // (deletions only shrink a file's true row set — a pruned file
+    // still provably holds no matching row; a kept file's deleted rows
+    // are removed by the anti-join before the predicate applies). DV
+    // keys need only be unique across the SCANNED (kept) files.
+    val hasDv = kept.exists(_.dv.isDefined)
+    val keyDepth = if (hasDv) dvKeyDepth(path, kept.map(_.rel)) else 1
+    applyDeletionVectors(spark, path, kept,
+      readDataFiles(snap, kept.map(a => new HPath(snap.tbl, a.rel).toString),
+        withRowMeta = hasDv, keyDepth = keyDepth),
+      keyDepth = keyDepth)
+      .where(expr(predicate))
   }
 
   /** Rewrite physical-keyed add metadata (top-level stats objects and
@@ -6403,9 +5716,8 @@ object DeltaLog {
       (if (f.metadata.contains(PhysicalNameKey))
         f.metadata.getString(PhysicalNameKey) else f.name) -> f.name).toMap
 
-  /** Single-entry kernel of [[remapAddsToLogical]]: pure given the
-    * physical→logical name map, so the distributed prune can ship it to
-    * executors alongside [[DeltaStats.entryMayMatch]].
+  /** Pure given the physical→logical name map, so the distributed prune
+    * can ship it to executors alongside [[DeltaStats.entryMayMatch]].
     */
   private[sources] def remapAddToLogical(a: DeltaStats.AddEntry,
       physToLog: Map[String, String],
@@ -6434,13 +5746,6 @@ object DeltaLog {
       } catch { case _: Exception => Some(js) }
     }
     a.copy(partitionValues = pv, stats = stats)
-  }
-
-  private def remapAddsToLogical(adds: Seq[DeltaStats.AddEntry],
-      logical: StructType): Seq[DeltaStats.AddEntry] = {
-    val physToLog = physToLogMap(logical)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    adds.map(remapAddToLogical(_, physToLog, mapper))
   }
 
   /** How many files [[readWhere]] would open for `predicate` vs the
@@ -6544,28 +5849,10 @@ object DeltaLog {
 
   def skippingStats(spark: SparkSession, path: String, predicate0: String,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): (Int, Int) = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val predicate = augmentThroughGenerated(spark,
-      parsedTableSchema(spark, fs, tbl),
-      tablePartitionColumns(spark, fs, tbl).getOrElse(Nil), predicate0)
-    // above the log-size threshold both counts come from distributed
-    // aggregates — the driver holds two ints, never the add metadata
-    keptAddJsonsDf(spark, path, Some(predicate), None, None,
-        snapshotDriverMaxBytes) match {
-      case Some(keptDs) =>
-        val total = activeAddsDfAsOf(spark, path, None)
-          .map(_.count().toInt).getOrElse(0)
-        (keptDs.count().toInt, total)
-      case None =>
-        val adds = activeAddsAsOf(spark, path, None)
-        val schemaOpt = parsedTableSchema(spark, fs, tbl)
-        val pcols = tablePartitionColumns(spark, fs, tbl).getOrElse(Nil)
-        val kept = schemaOpt
-          .map(s => DeltaStats.prune(spark, predicate, s, pcols, adds))
-          .getOrElse(adds)
-        (kept.size, adds.size)
-    }
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    val predicate = augmentThroughGenerated(spark, snap.schema,
+      snap.partitionColumns.getOrElse(Nil), predicate0)
+    (snap.addsWhere(Some(predicate), lean = true).size, snap.numFiles.toInt)
   }
 
   /** OPTIMIZE: bin-pack the snapshot's small files (< `targetBytes`) into
@@ -6586,8 +5873,7 @@ object DeltaLog {
       targetBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Nil,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Int = {
-    val tbl0 = new HPath(path)
-    val fs0 = tbl0.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
     // liquid-clustered tables (delta.clustering domainMetadata): OPTIMIZE
     // without explicit columns clusters on the TABLE's declared
     // clustering columns, like delta-spark's — z-order is our clustering
@@ -6595,35 +5881,31 @@ object DeltaLog {
     // skip-on-any-clustered-column contract. Explicit zorderBy wins.
     val zCols =
       if (zorderBy.nonEmpty) zorderBy
-      else clusteringColumns(spark, fs0, tbl0)
+      else clusteringColumns(snap)
     // row tracking: compaction reorders rows across files, so positional
     // id defaults break — every restaged row's id/commit-version is
     // materialized into the hidden columns before the rewrite
     val (rowTrack, matCols, rtExtraCols) =
-      rowTrackingRewriteInfo(spark, fs0, tbl0, "optimize")
-    requireWriterCapability(spark, fs0, tbl0, "optimize",
+      rowTrackingRewriteInfo(snap, "optimize")
+    requireWriterCapability(snap, "optimize",
       adds = false, removes = false, rewrites = true,
       rowIdsHandled = rowTrack)
-    // fold + small-file filter run distributedly above the log-size
-    // threshold: the driver materializes only the VICTIM entries (a
-    // z-order rewrite is inherently O(table) — every file restages and
-    // must be listed in the commit's remove set)
+    // on a large log the small-file filter runs in executors: the driver
+    // materializes only the VICTIM entries (a z-order rewrite is
+    // inherently O(table) — every file restages and must be listed in
+    // the commit's remove set)
     val bytesCap = targetBytes
     val victims =
-      if (zCols.nonEmpty)
-        activeAddsWhere(spark, path,
-          snapshotDriverMaxBytes = snapshotDriverMaxBytes)
-      else activeAddsWhere(spark, path,
-        keep = Some((a: DeltaStats.AddEntry) => a.size < bytesCap),
-        snapshotDriverMaxBytes = snapshotDriverMaxBytes)
+      if (zCols.nonEmpty) snap.addsWhere()
+      else snap.addsWhere(keep = Some((a: DeltaStats.AddEntry) => a.size < bytesCap))
     if (victims.size <= 1 && zCols.isEmpty) return 0
     if (victims.isEmpty) return 0
-    val tbl = new HPath(path)
+    val tbl = snap.tbl
     val files = victims.map(a => new HPath(tbl, a.rel).toString)
     val totalBytes = math.max(1L, victims.map(_.size).sum)
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val dvVictims = victims.filter(_.dv.isDefined)
-    if (dvVictims.nonEmpty || columnMappingMode(spark, fs0, tbl0) != "none") {
+    if (dvVictims.nonEmpty || snap.mappingMode != "none") {
       // DV'd victims materialize their row filters in the restage: live
       // rows only (the same executor-side bitmap anti-join the snapshot
       // read uses), removes echo the superseded descriptors, replacements
@@ -6635,7 +5917,7 @@ object DeltaLog {
       // logical-named; commitRewrite's id staging annotates the rewrite).
       val keyDepth = dvKeyDepth(path, victims.map(_.rel))
       val live0 = applyDeletionVectors(spark, path, victims,
-        readDataFiles(spark, path, files, withRowMeta = true,
+        readDataFiles(snap, files, withRowMeta = true,
           keyDepth = keyDepth, extraCols = rtExtraCols),
         keepMeta = rowTrack, keyDepth = keyDepth)
       val live = matCols.map { case (mid, mver) =>
@@ -6645,7 +5927,7 @@ object DeltaLog {
       val (toWrite, packed) =
         if (zCols.isEmpty) (live, Some(nOut))
         else (zorderCluster(live, zCols, nOut), None)
-      commitRewrite(spark, path, "OPTIMIZE", victims.map(_.rel).sorted, toWrite,
+      commitRewrite(snap, "OPTIMIZE", victims.map(_.rel).sorted, toWrite,
         dataChange = false, numFiles = packed, logicalFrame = true,
         removeDvJson = dvVictims.map(a =>
           a.rel -> dvDescriptorJson(a.dv.get)).toMap,
@@ -6662,11 +5944,11 @@ object DeltaLog {
         // columns, attach every row's current id, drop the meta
         val keyDepth = dvKeyDepth(path, victims.map(_.rel))
         withMaterializedRowIds(spark, path, victims,
-          readDataFiles(spark, path, files, withRowMeta = true,
+          readDataFiles(snap, files, withRowMeta = true,
             keyDepth = keyDepth, extraCols = rtExtraCols),
           mid, mver, keyDepth).drop(DvFileCol, DvRowCol)
       case None =>
-        val restageSchema = parsedTableSchema(spark, fs0, tbl0)
+        val restageSchema = snap.schema
           .map(declared => stripMeta(declared).asInstanceOf[StructType])
         val reader0 = spark.read.option("basePath", path)
         restageSchema match {
@@ -6678,7 +5960,7 @@ object DeltaLog {
     val (toWrite, packed) =
       if (zCols.isEmpty) (df, Some(nOut))
       else (zorderCluster(df, zCols, nOut), None)
-    commitRewrite(spark, path, "OPTIMIZE", victims.map(_.rel).sorted, toWrite,
+    commitRewrite(snap, "OPTIMIZE", victims.map(_.rel).sorted, toWrite,
       dataChange = false, numFiles = packed, logicalFrame = false,
       removeSize = victims.map(a => a.rel -> a.size).toMap)
     victims.size
@@ -6754,182 +6036,120 @@ object DeltaLog {
     */
   def restore(spark: SparkSession, path: String, version: Long,
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Unit = {
-    val tbl = new HPath(path)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNotAppendOnly(spark, fs, tbl, "restore")
+    val current = Snapshot(spark, path, None, snapshotDriverMaxBytes)
+    val tbl = current.tbl
+    val fs = current.fs
+    requireNotAppendOnly(current, "restore")
     // rowIdsHandled: restore re-references ORIGINAL files, echoing their
     // baseRowId/defaultRowCommitVersion — ids come back exactly as they
     // were at the target version
-    requireWriterCapability(spark, fs, tbl, "restore",
+    requireWriterCapability(current, "restore",
       adds = true, removes = true, rewrites = true,
       rowIdsHandled = true)
+    val target = Snapshot(spark, path, Some(version), snapshotDriverMaxBytes)
     // DV-aware: snapshots compare as (path, DV descriptor) pairs — a file
     // live at both endpoints but with a DIFFERENT deletion vector is
     // remove+re-added with the TARGET's descriptor (the protocol shape of
     // a DV update), so restoring across DV deletes resurrects exactly the
     // target version's row set.
-    def dvKey(a: DeltaStats.AddEntry): String =
-      a.dv.map(dvDescriptorJson).getOrElse("")
-    val logP = logDir(tbl)
-    val large = fs.exists(logP) &&
-      snapshotLogBytes(fs, logP, None) > snapshotDriverMaxBytes
-    // the two snapshots DIFF to (removeEntries, addEntries) — O(changed
-    // files), exactly the commit being authored. Above the log-size
-    // threshold both folds, the diff join, the DV comparison and the
-    // vacuumed-file existence checks all run in EXECUTORS; the driver
-    // collects only the diff
-    val (removeEntries, addEntries): (Seq[DeltaStats.AddEntry], Seq[DeltaStats.AddEntry]) =
-      if (!large) {
-        val targetAdds = activeAddsAsOf(spark, path, Some(version))
-        val currentAdds = activeAddsAsOf(spark, path, None)
-        val targetByRel = targetAdds.map(a => a.rel -> a).toMap
-        val currentByRel = currentAdds.map(a => a.rel -> a).toMap
-        targetAdds.foreach { a =>
-          if (!fs.exists(new HPath(tbl, a.rel)))
-            throw graft.GraftError.InvalidOperation("restore",
-              s"file ${a.rel} of version $version was vacuumed — cannot restore")
-          // the target's DV payload must still exist too (an old bin a
-          // later vacuum swept away cannot be re-referenced)
-          a.dv.foreach { d =>
-            val bin = d.storageType match {
-              case "u" => Some(dvFilePath(tbl, d.pathOrInlineDv))
-              case "p" => Some(new HPath(d.pathOrInlineDv))
-              case _ => None // inline payloads live in the log itself
+    // The two snapshots DIFF to (removeEntries, addEntries) — O(changed
+    // files), exactly the commit being authored. The diff join, the DV
+    // comparison and the vacuumed-file existence checks all run in
+    // EXECUTORS; the driver collects only the diff.
+    def frame(s: Snapshot): DataFrame = s.addsFrame.getOrElse(
+      throw new IllegalArgumentException(
+        s"restore: empty or missing _delta_log in $path"))
+    val tDf = frame(target)
+      .select(col("graft_path").as("graft_p"), col("graft_add").as("graft_t"))
+      .localCheckpoint(true) // diff join + existence check
+    val cDf = frame(current)
+      .select(col("graft_path").as("graft_p2"), col("graft_add").as("graft_c"))
+    val sess = spark
+    import sess.implicits._
+    // vacuumed-file check over the TARGET snapshot, in executors: only
+    // the missing names come back
+    val confEntries: Array[(String, String)] = {
+      val it = spark.sparkContext.hadoopConfiguration.iterator()
+      val b = Array.newBuilder[(String, String)]
+      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
+      b.result()
+    }
+    val tblStr = path
+    val missing: Array[String] = tDf.select("graft_t").as[String]
+      .mapPartitions { it =>
+        lazy val conf = {
+          val c = new org.apache.hadoop.conf.Configuration(false)
+          confEntries.foreach { case (k, v) => c.set(k, v) }
+          c
+        }
+        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        it.flatMap { s =>
+          val node = try mapper.readTree(s) catch { case _: Exception => null }
+          Option(node).flatMap(parseAddEntry).toSeq.flatMap { e =>
+            val base = new HPath(tblStr)
+            val f = new HPath(base, e.rel)
+            val ffs = f.getFileSystem(conf)
+            val dataMissing =
+              if (!ffs.exists(f)) Seq(s"file ${e.rel}") else Nil
+            // the target's DV payload must still exist too (an old bin a
+            // later vacuum swept away cannot be re-referenced)
+            val binMissing = e.dv.toSeq.flatMap { d =>
+              val bin = d.storageType match {
+                case "u" => Some(dvFilePath(base, d.pathOrInlineDv))
+                case "p" => Some(new HPath(d.pathOrInlineDv))
+                case _ => None // inline payloads live in the log itself
+              }
+              bin.filterNot(ffs.exists)
+                .map(b => s"deletion-vector file ${b.getName}")
             }
-            bin.foreach { b =>
-              if (!fs.exists(b)) throw graft.GraftError.InvalidOperation("restore",
-                s"deletion-vector file ${b.getName} of version $version was " +
-                  "vacuumed — cannot restore")
-            }
+            dataMissing ++ binMissing
           }
         }
-        val removes = currentAdds
-          .filter(a => !targetByRel.contains(a.rel))
-        val adds = targetAdds.filter { a =>
-          currentByRel.get(a.rel).forall(c => dvKey(c) != dvKey(a)) }
-        // a path present at both endpoints with a changed DV re-adds under
-        // the target descriptor; the protocol pairs that with a remove of
-        // the superseded entry (echoing ITS descriptor)
-        val dvSwaps = adds.filter(a => currentByRel.contains(a.rel))
-        ((removes ++ dvSwaps.flatMap(a => currentByRel.get(a.rel)))
-          .sortBy(_.rel), adds.sortBy(_.rel))
-      } else {
-        val tDf = activeAddsDfAsOf(spark, path, Some(version)).getOrElse(
-          throw new IllegalArgumentException(
-            s"restore: empty or missing _delta_log in $path"))
-          .select(col("graft_path").as("graft_p"),
-            col("graft_add").as("graft_t"))
-          .localCheckpoint(true) // diff join + existence check
-        val cDf = activeAddsDfAsOf(spark, path, None).getOrElse(
-          throw new IllegalArgumentException(
-            s"restore: empty or missing _delta_log in $path"))
-          .select(col("graft_path").as("graft_p2"),
-            col("graft_add").as("graft_c"))
-        val sess = spark
-        import sess.implicits._
-        // vacuumed-file check over the TARGET snapshot, in executors:
-        // only the missing names come back
-        val confEntries: Array[(String, String)] = {
-          val it = spark.sparkContext.hadoopConfiguration.iterator()
-          val b = Array.newBuilder[(String, String)]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-          b.result()
-        }
-        val tblStr = path
-        val missing: Array[String] = tDf.select("graft_t").as[String]
-          .mapPartitions { it =>
-            lazy val conf = {
-              val c = new org.apache.hadoop.conf.Configuration(false)
-              confEntries.foreach { case (k, v) => c.set(k, v) }
-              c
-            }
-            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-            it.flatMap { s =>
-              val node = try mapper.readTree(s) catch { case _: Exception => null }
-              Option(node).flatMap(parseAddEntry).toSeq.flatMap { e =>
-                val base = new HPath(tblStr)
-                val f = new HPath(base, e.rel)
-                val ffs = f.getFileSystem(conf)
-                val dataMissing =
-                  if (!ffs.exists(f)) Seq(s"file ${e.rel}") else Nil
-                val binMissing = e.dv.toSeq.flatMap { d =>
-                  val bin = d.storageType match {
-                    case "u" => Some(dvFilePath(base, d.pathOrInlineDv))
-                    case "p" => Some(new HPath(d.pathOrInlineDv))
-                    case _ => None
-                  }
-                  bin.filterNot(ffs.exists)
-                    .map(b => s"deletion-vector file ${b.getName}")
-                }
-                dataMissing ++ binMissing
-              }
-            }
-          }.collect()
-        if (missing.nonEmpty)
-          throw graft.GraftError.InvalidOperation("restore",
-            s"${missing.head} of version $version was vacuumed — cannot restore")
-        val joined = tDf.join(cDf, tDf("graft_p") === cDf("graft_p2"),
-            "full_outer")
-          .select(col("graft_t"), col("graft_c"))
-        val tagged: Array[(String, String)] = joined.as[(String, String)]
-          .mapPartitions { it =>
-            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-            def dvOf(s: String): String = {
-              val node = try mapper.readTree(s) catch { case _: Exception => null }
-              Option(node).flatMap(parseAddEntry).flatMap(_.dv)
-                .map(dvDescriptorJson).getOrElse("")
-            }
-            it.flatMap { case (t, c) =>
-              if (t == null) Seq(("remove", c))
-              else if (c == null) Seq(("add", t))
-              // DV generation swap: re-add under the target descriptor,
-              // remove the superseded entry (echoing ITS descriptor)
-              else if (dvOf(t) != dvOf(c)) Seq(("remove", c), ("add", t))
-              else Nil
-            }
-          }.collect()
+      }.collect()
+    if (missing.nonEmpty)
+      throw graft.GraftError.InvalidOperation("restore",
+        s"${missing.head} of version $version was vacuumed — cannot restore")
+    val joined = tDf.join(cDf, tDf("graft_p") === cDf("graft_p2"), "full_outer")
+      .select(col("graft_t"), col("graft_c"))
+    val tagged: Array[(String, String)] = joined.as[(String, String)]
+      .mapPartitions { it =>
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        def parse(s: String): Option[DeltaStats.AddEntry] = {
+        def dvOf(s: String): String = {
           val node = try mapper.readTree(s) catch { case _: Exception => null }
-          Option(node).flatMap(parseAddEntry)
+          Option(node).flatMap(parseAddEntry).flatMap(_.dv)
+            .map(dvDescriptorJson).getOrElse("")
         }
-        (tagged.collect { case ("remove", s) => s }.toSeq
-          .flatMap(parse(_)).sortBy(_.rel),
-          tagged.collect { case ("add", s) => s }.toSeq
-            .flatMap(parse(_)).sortBy(_.rel))
-      }
+        it.flatMap { case (t, c) =>
+          if (t == null) Seq(("remove", c))
+          else if (c == null) Seq(("add", t))
+          // DV generation swap: re-add under the target descriptor,
+          // remove the superseded entry (echoing ITS descriptor)
+          else if (dvOf(t) != dvOf(c)) Seq(("remove", c), ("add", t))
+          else Nil
+        }
+      }.collect()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def entries(kind: String): Seq[DeltaStats.AddEntry] =
+      tagged.collect { case (`kind`, s) => s }.toSeq.flatMap { s =>
+        val node = try mapper.readTree(s) catch { case _: Exception => null }
+        Option(node).flatMap(parseAddEntry)
+      }.sortBy(_.rel)
     val log = logDir(tbl)
     val next = nextVersion(fs, log).getOrElse(0L)
     val txnId = java.util.UUID.randomUUID().toString
     val actions = ListBuffer.empty[String]
-    actions += commitInfoJson("RESTORE", txnId, fs, tbl,
-      tableConfiguration(spark, fs, tbl))
+    actions += commitInfoJson("RESTORE", txnId, fs, tbl, current.configuration)
     val now = System.currentTimeMillis()
-    removeEntries.foreach { a =>
+    entries("remove").foreach { a =>
       val removedDv = a.dv.map(d =>
         s""","deletionVector":${dvDescriptorJson(d)}""").getOrElse("")
       actions += s"""{"remove":{"path":"${esc(a.rel)}",""" +
         s""""deletionTimestamp":$now,"dataChange":true,"size":${a.size}$removedDv}}"""
     }
-    addEntries.foreach { a =>
-      val pvJson = a.partitionValues.map { case (k, v) =>
-        s""""${esc(k)}":${if (v == null) "null" else "\"" + esc(v) + "\""}"""
-      }.mkString("{", ",", "}")
-      val stats = a.stats.map(js => s""","stats":"${esc(js)}"""").getOrElse("")
-      val dvJson = a.dv.map(d =>
-        s""","deletionVector":${dvDescriptorJson(d)}""").getOrElse("")
-      // row tracking: restore re-references the ORIGINAL unmodified
-      // files — echoing their baseRowId/defaultRowCommitVersion keeps
-      // every positional id exactly what it was at the target version
-      val rowField = (a.baseRowId, a.defaultRowCommitVersion) match {
-        case (Some(b), Some(v)) =>
-          s""","baseRowId":$b,"defaultRowCommitVersion":$v"""
-        case _ => ""
-      }
-      actions += s"""{"add":{"path":"${esc(a.rel)}","partitionValues":$pvJson,""" +
-        s""""size":${a.size},"modificationTime":$now,"dataChange":true""" +
-        s"""$stats$dvJson$rowField}}"""
-    }
+    // row tracking: restore re-references the ORIGINAL unmodified files —
+    // the re-add echoes their baseRowId/defaultRowCommitVersion, keeping
+    // every positional id exactly what it was at the target version
+    entries("add").foreach(a => actions += s"""{"add":${addJson(a, now)}}""")
     if (!acquireCommitSlot(fs, log, next, txnId, actions.mkString("\n") + "\n"))
       throw graft.GraftError.WriteError(path, "restore",
         s"version-$next commit lost to a concurrent writer — re-run restore")
@@ -6953,7 +6173,8 @@ object DeltaLog {
     // deleting folded commits destroys any action kinds the checkpoint
     // fold didn't carry — gate like writeCheckpoint (domainMetadata
     // folds, so row-tracked tables clean up fine)
-    requireWriterCapability(spark, fs, tbl, "cleanup_log",
+    val snap = Snapshot(spark, path)
+    requireWriterCapability(snap, "cleanup_log",
       adds = false, removes = false, rewrites = true,
       rowIdsHandled = true)
     val cp = lastCheckpointVersion(fs, log).getOrElse(return Nil)
@@ -6963,7 +6184,7 @@ object DeltaLog {
     // replay the (possibly foreign-compacted) history beneath it. The
     // conservative stance the protocol allows: skip cleanup below the
     // boundary entirely.
-    val protV = checkpointProtectionVersion(spark, fs, tbl)
+    val protV = checkpointProtectionVersion(snap)
     val victims = existingVersions(fs, log)
       .filter(v => v <= cp && v >= protV).map(commitName)
     victims.foreach(n => fs.delete(new HPath(log, n), false))
@@ -7085,70 +6306,33 @@ object DeltaLog {
       snapshotDriverMaxBytes: Long = SnapshotDriverMaxBytes): Seq[String] = {
     val tbl = new HPath(path)
     val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val snap = Snapshot(spark, path, None, snapshotDriverMaxBytes)
     // version/feature floor only: vacuum deletes UNREFERENCED files, so
     // no row delta and no restage — but an unknown v7 writer feature may
     // reference files through actions this replay doesn't parse
-    if (fs.exists(logDir(tbl)))
-      requireWriterCapability(spark, fs, tbl, "vacuum",
+    if (snap.logExists)
+      requireWriterCapability(snap, "vacuum",
         adds = false, removes = false, rewrites = false)
     val base = fs.makeQualified(tbl).toUri.getPath.stripSuffix("/")
-    // active reference sets: RELATIVE PATH STRINGS of the live data
-    // files and of the bins their DV descriptors reference. Above the
-    // log-size threshold both come from the distributed fold — the
-    // driver keeps two path-string sets (what the listing diff needs
-    // anyway), never the snapshot's add metadata
-    val large = fs.exists(logDir(tbl)) &&
-      snapshotLogBytes(fs, logDir(tbl), None) > snapshotDriverMaxBytes
-    val (active: Set[String], referencedBins: Set[String]) =
-      if (large) {
-        val snap = activeAddsDfAsOf(spark, path, None).getOrElse(
-          throw new IllegalArgumentException(
-            s"vacuum: empty or missing _delta_log in $path"))
-          .localCheckpoint(true) // rels + bins
-        val sess = spark
-        import sess.implicits._
-        val qualifiedTbl = fs.makeQualified(tbl).toString
-        val baseStr = base
-        val rels = snap.select("graft_path").as[String].collect()
-          .map(r => new HPath(new HPath(qualifiedTbl), r).toUri.getPath
-            .stripPrefix(baseStr).stripPrefix("/")).toSet
-        val bins = snap.select("graft_add").as[String]
-          .mapPartitions { it =>
-            val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-            it.flatMap { s =>
-              val node = try mapper.readTree(s) catch { case _: Exception => null }
-              Option(node).flatMap(parseAddEntry).flatMap(_.dv).flatMap { d =>
-                d.storageType match {
-                  case "u" => Some(dvFilePath(new HPath(qualifiedTbl),
-                    d.pathOrInlineDv).toUri.getPath
-                    .stripPrefix(baseStr).stripPrefix("/"))
-                  case "p" => Some(new HPath(d.pathOrInlineDv).toUri.getPath
-                    .stripPrefix(baseStr).stripPrefix("/"))
-                  case _ => None // inline payloads live in the log itself
-                }
-              }
-            }
-          }.collect().toSet
-        (rels, bins)
-      } else {
-        val activeAdds = activeAddsAsOf(spark, path, None)
-        // qualify each active path the same way as `base` — add rels
-        // resolve against the caller's (possibly relative) table path,
-        // and an unqualified string would never strip to a relative key
-        (activeAdds
-          .map(a => fs.makeQualified(new HPath(tbl, a.rel)).toUri.getPath
-            .stripPrefix(base).stripPrefix("/"))
-          .toSet,
-          activeAdds.flatMap(_.dv).flatMap { d =>
-            d.storageType match {
-              case "u" => Some(fs.makeQualified(dvFilePath(tbl, d.pathOrInlineDv))
-                .toUri.getPath.stripPrefix(base).stripPrefix("/"))
-              case "p" => Some(fs.makeQualified(new HPath(d.pathOrInlineDv))
-                .toUri.getPath.stripPrefix(base).stripPrefix("/"))
-              case _ => None // inline payloads live in the log itself
-            }
-          }.toSet)
+    // active reference sets: RELATIVE PATH STRINGS of the live data files
+    // and of the bins their DV descriptors reference — from path-level
+    // entries, what the listing diff needs anyway. Each active path is
+    // qualified the same way as `base`: add rels resolve against the
+    // caller's (possibly relative) table path, and an unqualified string
+    // would never strip to a relative key.
+    val activeAdds = snap.addsWhere(lean = true)
+    val active: Set[String] = activeAdds
+      .map(a => fs.makeQualified(new HPath(tbl, a.rel)).toUri.getPath
+        .stripPrefix(base).stripPrefix("/")).toSet
+    val referencedBins: Set[String] = activeAdds.flatMap(_.dv).flatMap { d =>
+      d.storageType match {
+        case "u" => Some(fs.makeQualified(dvFilePath(tbl, d.pathOrInlineDv))
+          .toUri.getPath.stripPrefix(base).stripPrefix("/"))
+        case "p" => Some(fs.makeQualified(new HPath(d.pathOrInlineDv))
+          .toUri.getPath.stripPrefix(base).stripPrefix("/"))
+        case _ => None // inline payloads live in the log itself
       }
+    }.toSet
     // removal timestamps from the retained commits' remove actions —
     // rel → newest deletionTimestamp, and the same for DV bin files via
     // the descriptors the removes echo. An orphan whose remove was

@@ -37,6 +37,22 @@ object Loaders {
     spark
   }
 
+  /** Run `body` with the session confs in `settings`, then restore each
+    * key's prior value (unsetting keys that had none). The values are set
+    * inside the `try`, so a failure while setting them or anywhere in
+    * `body` never leaks them into later work on the shared session.
+    */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val prior = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Extension dispatch (reference src/elusion.rs:6716-6760): delta dir
     * check first, then csv/json/parquet. Column names lowercased on load.
     */
@@ -204,10 +220,6 @@ object Loaders {
     GraftFrame(normalizeNtzTimestamps(
       DeltaLog.readAsOfTimestamp(spark, path, tsMillis)), alias)
 
-  /** Predicate-pruned delta read: only files whose add-action stats may
-    * satisfy `predicate` are opened — see [[DeltaLog.readWhere]]. The full
-    * predicate is re-applied, so results equal `loadDelta(...).filter`.
-    */
   /** Change-feed load — [[DeltaLog.readChanges]] wrapped as a frame:
     * rows changed in the version window (from, to], tagged
     * `_change_type` / `_commit_version`, NTZ-normalized like every other
@@ -244,6 +256,10 @@ object Loaders {
     GraftFrame(normalizeNtzTimestamps(
       DeltaLog.readWithRowIds(spark, path)), alias)
 
+  /** Predicate-pruned delta read: only files whose add-action stats may
+    * satisfy `predicate` are opened — see [[DeltaLog.readWhere]]. The full
+    * predicate is re-applied, so results equal `loadDelta(...).filter`.
+    */
   def loadDeltaWhere(spark: SparkSession, path: String, alias: String,
       predicate: String, versionAsOf: Option[Long] = None): GraftFrame = {
     val hPath = new org.apache.hadoop.fs.Path(path)

@@ -837,6 +837,17 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(math.abs(top.head._3 - 1.0) < 1e-6)
   }
 
+  test("pqTopK refuses a ksub hint below 1 instead of deriving silently") {
+    val none = spark.emptyDataFrame
+    Seq(0, -2).foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        Similarity.pqTopK(none, none, none, none, "embedding", "vec_id",
+          k = 3, ksub = bad)
+      }
+      assert(e.getMessage.contains("ksub"), e.getMessage)
+    }
+  }
+
   test("PQ ADC survives a sparse codebook (dropped empty centroid)") {
     val sp = spark; import sp.implicits._
     // hand-built codebook with a GAP: cent_ids 0, 1, 3 (2 was "dropped"

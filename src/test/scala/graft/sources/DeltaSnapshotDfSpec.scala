@@ -124,4 +124,81 @@ class DeltaSnapshotDfSpec extends SparkSpec {
     assert(viaDf == viaDriver,
       "DV filtering must be identical on the distributed route")
   }
+
+  /** First graft frame of each job's long call site, for the jobs `body`
+    * submits from this thread. A sentinel job drains the listener bus
+    * (FIFO) before the count is read, so no job of `body` is missed.
+    */
+  private def jobSites(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.spec.span"
+    val tag = java.util.UUID.randomUUID().toString
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val span = Option(e.properties).map(_.getProperty(key)).orNull
+        if (span == s"drain:$tag") drained = true
+        else if (span == tag)
+          sites.add(e.stageInfos.headOption.map(_.details).getOrElse("")
+            .linesIterator.find(_.startsWith("graft.")).getOrElse(""))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, s"drain:$tag")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(2)
+      assert(drained, "listener bus did not drain")
+      sites.toArray.toSeq.map(_.toString)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def checkpointOpens(sites: Seq[String]): Int =
+    sites.count(s => s.startsWith("graft.sources.DeltaLog") &&
+      s.contains("readCheckpoint("))
+
+  test("one snapshot per operation: the checkpoint is opened once on both fold routes") {
+    val sp = spark
+    import sp.implicits._
+    Seq(DeltaLog.SnapshotDriverMaxBytes -> "driver", 0L -> "distributed").foreach {
+      case (maxBytes, route) =>
+        val p = freshDir(s"opens_$route")
+        DeltaLog.write((1L to 40L).map(i => (i, s"r$i", i * 1.5))
+          .toDF("id", "name", "v"), "overwrite", p, checkpointInterval = 0)
+        (1 to 2).foreach { b =>
+          DeltaLog.write(Seq((100L + b, s"a$b", 0.5)).toDF("id", "name", "v"),
+            "append", p, checkpointInterval = 0)
+        }
+        DeltaLog.writeCheckpoint(spark, p, 2L)
+        DeltaLog.write(Seq((200L, "t", 2.0)).toDF("id", "name", "v"),
+          "append", p, checkpointInterval = 0)                   // v3
+        val readSites = jobSites {
+          DeltaLog.read(spark, p, None, snapshotDriverMaxBytes = maxBytes)
+        }
+        assert(checkpointOpens(readSites) == 1, s"$route read: $readSites")
+        if (route == "driver")
+          // one parquet footer job + one collect of every checkpoint action
+          assert(readSites.size <= 2, s"driver-route read jobs: $readSites")
+        val upsertSites = jobSites {
+          DeltaLog.upsert(Seq((5L, "u5", 55.0)).toDF("id", "name", "v"),
+            Seq("id"), p, snapshotDriverMaxBytes = maxBytes)       // v4
+        }
+        assert(checkpointOpens(upsertSites) == 1, s"$route upsert: $upsertSites")
+        val deleteSites = jobSites {
+          assert(DeltaLog.deleteWhere(spark, p, "id = 7",
+            snapshotDriverMaxBytes = maxBytes) == 1)               // v5
+        }
+        assert(checkpointOpens(deleteSites) == 1, s"$route delete: $deleteSites")
+        val got = DeltaLog.read(spark, p).collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(got.size == 42 && got(5L) == "u5" && !got.contains(7L))
+    }
+  }
 }
+

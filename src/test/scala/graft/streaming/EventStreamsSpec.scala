@@ -155,6 +155,23 @@ class EventStreamsSpec extends SparkSpec {
     assert(sec > 0.0)
   }
 
+  test("streamThroughput leaves the session confs as they were when the stream fails to start") {
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val priorShuffle = spark.conf.getOption(shuffleKey)
+    val priorProvider = spark.conf.getOption(providerKey)
+    // a string user id cannot bind the stateful processor's (Long,
+    // Double) input: the query fails while it is being built, after the
+    // drill's confs are in force
+    val bad = batch.withColumn("user_id", concat(lit("u"), col("user_id")))
+    intercept[Exception] {
+      EventStreams.streamThroughput(spark, bad, "target/tmp/stream_tp_fail",
+        numShards = 1, statePartitions = 3)
+    }
+    assert(spark.conf.getOption(shuffleKey) == priorShuffle)
+    assert(spark.conf.getOption(providerKey) == priorProvider)
+  }
+
   test("streaming parquet sink writes append-mode results") {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx = spark.sqlContext
